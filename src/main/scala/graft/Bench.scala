@@ -378,7 +378,8 @@ object Bench {
     while (kept < entries.size && {
         val cand = if (kept == 0) entries(kept)
           else "," + entries(kept)
-        assemble(acc.toString + cand, 0).length <= lineBudget
+        // entries.size bounds the omitted count the line will carry
+        assemble(acc.toString + cand, entries.size).length <= lineBudget
       }) {
       if (kept > 0) acc.append(",")
       acc.append(entries(kept))

@@ -103,24 +103,20 @@ object KeyJoinFeatures {
         struct(col(Intervals.ValidUntil).as("date"),
           lit(false).as("is_add"), featC.as("f")))).as("__d"): _*)
 
-    // `delta` is used twice (grid combos + the grid join) and is tiny by
-    // construction — one row per (strata, boundary date). Persist it so
-    // the heavy scan/join subtree beneath runs exactly once. A persist,
-    // NOT a localCheckpoint: the InMemoryRelation's size estimate is
-    // what lets Catalyst broadcast the grid join; a checkpointed
-    // LogicalRDD would degrade it to a sort-merge join. The lifetime is
-    // bounded by the query that consumes the series.
+    // `delta` is tiny by construction — one row per (strata, boundary
+    // date). It stays lazy: stratified, the grid combos re-read its
+    // subtree, which costs a second scan of the (interval-sliced) inputs
+    // but keeps the series a plain plan that reflects the store at the
+    // time it is evaluated.
     val delta = exploded
       .groupBy((sc :+ col("__d.date").as("date")): _*)
       .agg(
         agg.aggWhere(col("__d.f"), col("__d.is_add")).as("n_add"),
         agg.aggWhere(col("__d.f"), !col("__d.is_add")).as("n_remove"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Full date × strata grid, generated on executors. Combos come from
     // `delta`, not `interlaced`: the set is identical (every interlaced
-    // row forms a delta group) but the shared aggregation subtree becomes
-    // a ReusedExchange instead of a second scan+join of the fact table.
+    // row forms a delta group).
     val dates = spark.range(1).select(
       explode(sequence(startD, endD)).as("date"))
     val grid =

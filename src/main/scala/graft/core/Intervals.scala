@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Bitemporal interval conventions.
   *
   * A feature table carries `key_*` columns, feature value columns, and an
@@ -226,7 +228,7 @@ object Intervals {
         raise_error(lit("allenRelations: open-ended interval " +
           "(NULL valid_until) — close with a horizon date first"))
           .cast(df.schema(ValidUntil).dataType)))
-      .localCheckpoint(true) // guard + both join sides share one scan
+      .transform(Materialize(_)) // guard + both join sides share one scan
     val worst = base.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n"))
       .agg(max(col("__n"))).collect().headOption

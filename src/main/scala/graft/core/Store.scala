@@ -689,6 +689,11 @@ class FeatureStore(
     val storeScope: Option[String] = None,
     val commitProtocol: Committer = Committer.Rename) {
 
+  // the coverage log lives at `$storePath/logs`: a loader of that name
+  // would share its directory
+  require(!(loaders.keys ++ dsMap.map(_._2)).exists(_ == "logs"),
+    "loader name 'logs' is reserved for the store's coverage log")
+
   /** Validate a requested study period against the store's bounds
     * (reference: `ds$min_start_date` / `ds$max_end_date`,
     * R/DiseasystoreBase.R active bindings; ISO strings compare
@@ -719,6 +724,9 @@ class FeatureStore(
 
   private def tablePath(loader: String) = s"$storePath/$loader"
   private def logPath = s"$storePath/logs"
+  /** The coverage log's lock key: appends and the backup copy share it.
+    * Outside the legal loader-name space, so no table lock collides. */
+  private val LogLock = "__logs"
 
   private def readIfExists(path: String): Option[DataFrame] =
     if (fs.exists(new Path(path))) Some(spark.read.parquet(path)) else None
@@ -803,8 +811,8 @@ class FeatureStore(
     import spark.implicits._
     // All loaders append to ONE logs directory; concurrent append jobs
     // would share the committer's `_temporary/0` staging dir and can
-    // clobber each other's task files — serialize on a logs lock.
-    withTableLock("logs") {
+    // clobber each other's task files — serialize on the log lock.
+    withTableLock(LogLock) {
       Seq((loader, sliceTs, start, end, true))
         .toDF("table", "slice_ts", "ds_start", "ds_end", "success")
         .write.mode("append").parquet(logPath)
@@ -1135,9 +1143,6 @@ class FeatureStore(
         true
       }
     }
-    // "__logs" is outside the legal loader-name space — a loader
-    // literally named "logs" must not share this lock
-    //
     // The coverage log is ALWAYS a plain parquet directory, on every
     // committer: coveredDates reads `logPath` directly and appendLog
     // appends in place (append is not a versioned publish). Publishing
@@ -1149,7 +1154,7 @@ class FeatureStore(
     // serves the plain path. Loader TABLES above do travel through
     // `committer`: the destination is opened with the same
     // commitProtocol as the source.
-    if (fs.exists(new Path(logPath))) withTableLock("__logs") {
+    if (fs.exists(new Path(logPath))) withTableLock(LogLock) {
       val logs = spark.read.parquet(logPath)
       Committer.Rename.publish(destFs, new Path(s"$destPath/logs"),
         tmp => logs.write.mode("overwrite").parquet(tmp))

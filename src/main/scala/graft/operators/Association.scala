@@ -28,11 +28,11 @@ object Association {
     val items = df.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .filter(col("__i").isNotNull)
       .distinct()
-      .localCheckpoint(true) // basket count + supports + pair join
+      .transform(Materialize(_)) // basket count + supports + pair join
     val nB = items.select(col("__b")).distinct().count()
     require(nB > 0, "no baskets")
     val support = items.groupBy(col("__i")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true) // joined twice
+      .transform(Materialize(_)) // joined twice
     // apriori prune BEFORE pairing: c_ab <= min(c_a, c_b), so a pair
     // reaching minSupport needs both items frequent — dropping rare
     // items first cannot change the output but collapses the

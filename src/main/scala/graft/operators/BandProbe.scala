@@ -84,7 +84,7 @@ object BandProbe {
     def sigs(df: DataFrame, as: String, hcol: String) = df
       .filter(col(hashesCol).isNotNull && size(col(hashesCol)) > 0)
       .select(col(idCol).as(as), col(hashesCol).as(hcol))
-      .localCheckpoint(true) // band side + verify side
+      .transform(Materialize(_)) // band side + verify side
     def banded(s: DataFrame, idAs: String, hcol: String) = s
       .select(col(idAs), explode(col(hcol)).as("__fh"))
       .select(col(idAs),

@@ -166,7 +166,7 @@ object Chunking {
         .as("term"))
       .filter(col("term") =!= "")
       .groupBy(col(groupCol), col("term")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val thr = Selection.valueAtRanks(
         counts.withColumn("__neg", -col("c")), groupCol, "__neg",
         Seq("kth" -> s"least(__n, ${k}L)"))

@@ -73,11 +73,9 @@ object Classifier {
     val feats = TextAnalysis.hashFeatures(df, idCol, textCol, dim, seed)
       .select(col(idCol).as("__d"), col("bucket"),
         col("weight").cast("double").as("__x"))
-      .localCheckpoint(true) // re-read 2×iters times; never re-derive
-    val labeled = df.select(col(idCol).as("__d"),
-        when(labelPred, 1.0).otherwise(0.0).as("__y"))
-      .localCheckpoint(true)
-    val n = labeled.count()
+      .transform(Materialize(_)) // re-read 2×iters times; never re-derive
+    val (labeled, n) = Materialize.ckCount(df.select(col(idCol).as("__d"),
+        when(labelPred, 1.0).otherwise(0.0).as("__y")))
     require(n > 0, "empty training frame")
 
     val w = new Array[Double](dim)
@@ -173,16 +171,15 @@ object Classifier {
     require(keepBp > 0 && keepBp <= 10000, "keepBp in (0, 10000]")
     val (model, _) = train(df, idCol, textCol, labelPred, dim, iters,
       lr, seed)
-    val scored = score(model, df, idCol, textCol)
-      .withColumn("__negp", -col("prob_bp"))
-      .localCheckpoint(true) // cut resolve + filter share one result
+    // cut resolve + filter share one result; the total rides its job
+    val (scored, total) = Materialize.ckCount(score(model, df, idCol,
+      textCol).withColumn("__negp", -col("prob_bp")))
     val cutRows = Selection.valueAtRanks(
       scored.withColumn("__one", lit(1)), "__one", "__negp",
       Seq("cut" -> s"greatest(1L, (__n * ${keepBp}L) div 10000L)"))
       .select(col("value")).collect()
     val cut = cutRows(0).getLong(0)
     val nAbove = scored.filter(col("__negp") < cut).count()
-    val total = scored.count()
     val nKeep = math.max(1L, total * keepBp / 10000L)
     val tieSlots = nKeep - nAbove
     val tieIds = Selection.hashRankFilter(

@@ -79,13 +79,10 @@ object ConnectedComponents {
       : (DataFrame, Int) = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // one narrow materialization: nodes, the edge dedup and (below the
-    // bound) the driver collect all read it — the pairs subtree (often
-    // an expensive LSH/banded join) was previously computed twice
-    // the pairs subtree (often an expensive LSH/banded join) still
-    // materializes once; the bound count rides the materialization job
-    // (r18), and bound 0 now really means "force the distributed loop"
-    // (it used to driver-finish EMPTY input: 0 <= 0 — r17 ADVICE)
+    // one narrow materialization of the pairs subtree (often an
+    // expensive LSH/banded join): nodes, the edge dedup and (below the
+    // bound) the driver collect all read it; the bound count rides the
+    // materialization job, and bound 0 forces the distributed loop
     val (raw, nRaw) = Materialize.ckCount(pairs
       .select(col(aCol).cast("long").as("u"),
         col(bCol).cast("long").as("v")))
@@ -104,9 +101,12 @@ object ConnectedComponents {
         return (out, 0)
       }
     }
+    // nodes is pinned so raw can be released once the first edge
+    // generation is materialized
     val nodes = raw.select(col("u").as("id"))
       .unionByName(raw.select(col("v").as("id")))
       .distinct()
+      .transform(Materialize(_))
 
     // each round references the previous edge set several times (both
     // orientations, the min table, the re-attach join): plain persist
@@ -129,6 +129,7 @@ object ConnectedComponents {
     var (edges, cs) = ckSum(raw
       .filter(col("u") =!= col("v"))
       .distinct())
+    Materialize.free(raw)
     var rounds = 0
     var converged = cs._1 == 0L
     while (!converged && rounds < maxIter) {
@@ -153,10 +154,6 @@ object ConnectedComponents {
         .unionByName(sMins.select(col("u"), col("__m").as("v")))
         .filter(col("u") =!= col("v"))
         .distinct())
-      // the superseded round's checkpoint blocks are dead the moment
-      // `edges` is reassigned — release the underlying RDD (Dataset
-      // unpersist() was a silent no-op here: r17 ADVICE), or maxIter
-      // generations of the full edge set pile up in executor storage
       Materialize.free(edges)
       edges = small
       converged = next == cs

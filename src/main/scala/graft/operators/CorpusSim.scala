@@ -146,7 +146,7 @@ object CorpusSim {
       .select(col(sliceCol).cast("string").as("__s"),
         col(bucketCol).cast("long").as("__b"))
       .groupBy(col("__s"), col("__b")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true) // per-pair filtered probes + totals
+      .transform(Materialize(_)) // per-pair filtered probes + totals
     val totals = cnt.groupBy(col("__s")).agg(sum(col("__c")).as("__n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     require(totals.size >= 2, "need at least two slices")

@@ -80,7 +80,7 @@ object Dedup {
         graft.functions.NativeExprs.wordNgramHashes(
           TextAnalysis.words(col(textCol)), n).as("__hs"): _*)
       .withColumn("__sz", size(col("__hs")))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val sh = docs.select(
       (col(idCol) +: blockCols.map(col)) :+ col("__sz") :+
         explode(col("__hs")).as("__shash"): _*)
@@ -369,7 +369,7 @@ object Dedup {
     require(numPerms % bands == 0, "bands must divide numPerms")
     val r = numPerms / bands
     val sigs = portableSigs(df, idCol, textCol, n, numPerms)
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val banded = portableBands(sigs, idCol, bands, r)
     val candIds = banded.select(col(idCol).as("id_a"), col("__band"),
         col("__bkey"))
@@ -411,9 +411,9 @@ object Dedup {
     require(numPerms % bands == 0, "bands must divide numPerms")
     val r = numPerms / bands
     val corpusSigs = portableSigs(corpus, idCol, textCol, n, numPerms)
-      .withColumnRenamed(idCol, "corpus_id").localCheckpoint(true)
+      .withColumnRenamed(idCol, "corpus_id").transform(Materialize(_))
     val newSigs = portableSigs(incoming, idCol, textCol, n, numPerms)
-      .withColumnRenamed(idCol, "new_id").localCheckpoint(true)
+      .withColumnRenamed(idCol, "new_id").transform(Materialize(_))
     val candIds = portableBands(newSigs, "new_id", bands, r)
       .join(portableBands(corpusSigs, "corpus_id", bands, r)
           .withColumnRenamed("__band", "__band_c")
@@ -477,10 +477,11 @@ object Dedup {
     val edges = raw.select(col("a"), col("b"))
       .unionByName(raw.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize(_))
+    Materialize.free(raw)
     var labels = edges.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize(_))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -489,22 +490,16 @@ object Dedup {
         .select(col("a").as("id"), col("label"))
       val next = labels.unionByName(viaNbr)
         .groupBy("id").agg(min(col("label")).as("label"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(Materialize(_))
       val changed = next.join(labels.withColumnRenamed("label", "__old"),
         "id").filter(col("label") =!= col("__old")).count()
-      labels.unpersist()
+      Materialize.free(labels)
       labels = next
       converged = changed == 0
       iter += 1
     }
-    edges.unpersist()
-    // the final generation's persist must not outlive the call: the
-    // output is narrow (id, label) — checkpoint it, then release
-    val out = labels
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .localCheckpoint(true)
-    labels.unpersist()
-    out
+    Materialize.free(edges)
+    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** All-pairs formulation (quadratic within a block); kept as the
@@ -515,7 +510,7 @@ object Dedup {
     val sh = shingles(df, idCol, textCol, blockCols, n)
       .withColumn("__shash", xxhash64(col("__shingle")))
       .drop("__shingle")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("__sz"))
     val a = sh.select(
       (col(idCol).as("id_a") +: blockCols.map(c => col(c).as(s"__ba_$c"))) :+
@@ -576,7 +571,7 @@ object Dedup {
     val sigs = df.select(col(idCol),
       graft.functions.NativeExprs.minhashSignature(
         shingleArray(col(textCol), 3), numHashes).as("__sig"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val banded = sigs.select(
       col(idCol),
       col("__sig"),
@@ -657,7 +652,7 @@ object Dedup {
                    maxHamming: Int): DataFrame = {
     val sigs = df.select(col(idCol),
       graft.functions.NativeExprs.simhash64(TextAnalysis.words(col(textCol)))
-        .as("__sh")).localCheckpoint(true)
+        .as("__sh")).transform(Materialize(_))
     val banded = sigs.select(col(idCol), col("__sh"),
       posexplode(array((0 until 4).map(bi =>
         shiftright(col("__sh"), bi * 16).bitwiseAND(0xFFFFL)): _*)))

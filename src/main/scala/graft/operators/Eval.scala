@@ -29,7 +29,7 @@ object Eval {
   private[graft] def boundedTally(tally: DataFrame, groupCol: String,
                                   maxSeries: Long, op: String): DataFrame = {
     require(maxSeries > 0, s"$op: maxSeries must be positive")
-    val pinned = tally.localCheckpoint(true)
+    val pinned = tally.transform(Materialize(_))
     val worst = pinned.groupBy(col(groupCol))
       .agg(count(lit(1)).as("__nd"))
       .agg(max(col("__nd"))).collect().headOption
@@ -371,7 +371,7 @@ object Eval {
     val base = df.select(col(scoreCol).cast("long").as("__k"),
         when(treated, 1L).otherwise(0L).as("__t"),
         when(converted, 1L).otherwise(0L).as("__y"))
-      .localCheckpoint(true) // cut scan + bucket agg share the rows
+      .transform(Materialize(_)) // cut scan + bucket agg share the rows
     val cutVals = Selection.valueAtRanks(
         base.withColumn("__one", lit(1)), "__one", "__k",
         (1 until nBuckets).map(i =>
@@ -592,7 +592,7 @@ object Eval {
         coalesce(col(predictedCol).cast("string"), lit("__NULL__"))
           .as("__p"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true) // margins + diagonal share one scan
+      .transform(Materialize(_)) // margins + diagonal share one scan
     val byActual = cells.groupBy(col("__a").as("class"))
       .agg(sum(col("__c")).as("n_actual"))
     val byPred = cells.groupBy(col("__p").as("class"))
@@ -1021,7 +1021,7 @@ object Eval {
     // materialize it once or each job replays the tally SHUFFLE from
     // the raw scan (the r10→r12 q259 creep: 0.59 s → 1.5 s, a 2.5×
     // structural job-cost increase at any scale)
-    val tal = tal0.localCheckpoint(true)
+    val tal = tal0.transform(Materialize(_))
     val q = 10000 - alphaBp
     val thr = Selection.valueAtRanks(tal, groupCol, "__s",
         Seq("qhat" ->

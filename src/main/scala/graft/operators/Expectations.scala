@@ -87,7 +87,7 @@ object Expectations {
     }
     refs.foreach { r =>
       val fk = df.select(col(r.fkCol)).filter(col(r.fkCol).isNotNull)
-        .localCheckpoint(true) // total + anti-join read it
+        .transform(Materialize(_)) // total + anti-join read it
       val miss = fk.join(
         r.dim.select(col(r.pkCol).as(r.fkCol)).distinct(),
         Seq(r.fkCol), "left_anti")

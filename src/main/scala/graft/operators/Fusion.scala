@@ -75,7 +75,7 @@ object Fusion {
     val res = results.filter(col(rankCol) <= k)
       .select(col(queryCol), col(docCol), col(rankCol).cast("long").as("__rk"))
     val tr = truth.select(col(queryCol), col(docCol)).distinct()
-      .localCheckpoint(true) // n_truth agg + hit join both read it
+      .transform(Materialize(_)) // n_truth agg + hit join both read it
     val nTruth = tr.groupBy(col(queryCol)).agg(count(lit(1)).as("n_truth"))
     val hits = res.join(tr, Seq(queryCol, docCol))
       .groupBy(col(queryCol))
@@ -168,7 +168,7 @@ object Fusion {
       .groupBy(col(queryCol), col(docCol))
       .agg(min(col(rankCol).cast("int")).as("__rk"))
     val tr = truth.select(col(queryCol), col(docCol)).distinct()
-      .localCheckpoint(true) // n_truth agg + hit join both read it
+      .transform(Materialize(_)) // n_truth agg + hit join both read it
     val nT = tr.groupBy(col(queryCol)).agg(count(lit(1)).as("n_truth"))
     val dcg = res.join(tr, Seq(queryCol, docCol))
       .select(col(queryCol),
@@ -209,7 +209,7 @@ object Fusion {
       .groupBy(col(queryCol), col(docCol))
       .agg(min(col(rankCol).cast("long")).as("__rk"))
     val tr = truth.select(col(queryCol), col(docCol)).distinct()
-      .localCheckpoint(true) // n_truth agg + hit join both read it
+      .transform(Materialize(_)) // n_truth agg + hit join both read it
     val nT = tr.groupBy(col(queryCol)).agg(count(lit(1)).as("n_truth"))
     val wq = Window.partitionBy(col(queryCol)).orderBy(col("__rk"))
     val ap = res.join(tr, Seq(queryCol, docCol))

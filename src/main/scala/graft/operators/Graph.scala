@@ -47,11 +47,12 @@ object Graph {
     */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val und = undirected(edges, srcCol, dstCol)
-      .localCheckpoint(true) // three consumers: degrees, orientation, closure
+      // three consumers: degrees, orientation, closure
+      .transform(Materialize(_))
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true) // consumed by orientation + final join
+      .transform(Materialize(_)) // consumed by orientation + final join
     // orient: (a -> b) iff (deg(a), a) < (deg(b), b); total order, so
     // exactly one direction per edge and out-degrees are O(sqrt(m)).
     // __bd rides along = deg(b), the head's orientation key, so wedge
@@ -74,7 +75,7 @@ object Graph {
       // comes back partition-blind and EnsureRequirements re-inserts
       // both exchanges anyway (measured: q131 plan identical, plus a
       // wasted construction shuffle). The two apex exchanges stay.
-      .localCheckpoint(true) // wedge self-join + closure probe
+      .transform(Materialize(_)) // wedge self-join + closure probe
     // ordered wedges (b, c) with b before c in the orientation order:
     // a triangle's three oriented edges form a -> b -> c, so it is
     // found exactly once — at its unique apex a, closed by edge b -> c
@@ -160,11 +161,10 @@ object Graph {
       col("__src"))
     if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges)
       return hitsDriver(e, iters, scale)
-    val nodes = e.select(col("__src").as("node"))
+    val (nodes, nNodes) = Materialize.ckCount(e.select(col("__src").as("node"))
       .union(e.select(col("__dst")))
-      .distinct()
-      .localCheckpoint(true)
-    require(nodes.count() > 0, "empty edge set")
+      .distinct())
+    require(nNodes > 0, "empty edge set")
     val dmax = e.select(col("__src").as("n"))
       .union(e.select(col("__dst")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -180,24 +180,27 @@ object Graph {
     for (_ <- 0 until iters) {
       val rawA = e.join(hub.withColumnRenamed("node", "__src"), Seq("__src"))
         .groupBy(col("__dst")).agg(sum(col("hub")).as("__ra"))
-        .localCheckpoint(true) // total + normalize read it
+        .transform(Materialize(_)) // total + normalize read it
       val aTot = rawA.agg(sum(col("__ra")).as("__t"))
       val na = rawA.crossJoin(broadcast(aTot))
         .select(col("__dst").as("node"),
           expr(s"__ra * ${eff}L div greatest(__t, 1L)").as("auth"))
       val rawH = e.join(na.withColumnRenamed("node", "__dst"), Seq("__dst"))
         .groupBy(col("__src")).agg(sum(col("auth")).as("__rh"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       val hTot = rawH.agg(sum(col("__rh")).as("__t"))
       val nh = rawH.crossJoin(broadcast(hTot))
         .select(col("__src").as("node"),
           expr(s"__rh * ${eff}L div greatest(__t, 1L)").as("hub"))
-      auth = nodes.join(na, Seq("node"), "left")
+      val nextAuth = nodes.join(na, Seq("node"), "left")
         .select(col("node"), coalesce(col("auth"), lit(0L)).as("auth"))
-        .localCheckpoint(true)
-      hub = nodes.join(nh, Seq("node"), "left")
+        .transform(Materialize(_))
+      val nextHub = nodes.join(nh, Seq("node"), "left")
         .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
+      Seq(rawA, rawH, auth, hub).foreach(Materialize.free)
+      auth = nextAuth
+      hub = nextHub
     }
     hub.join(auth, Seq("node"))
   }
@@ -282,12 +285,12 @@ object Graph {
     val nodes = und.select(col("u").as("node"))
       .union(und.select(col("v")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val prop = und.select(col("u").as("__src"), col("v").as("__dst"))
       .union(und.select(col("v"), col("u")))
       .union(nodes.select(col("node"), col("node")))
       .repartition(col("__src"))
-      .localCheckpoint(true) // scanned every round
+      .transform(Materialize(_)) // scanned every round
     var labels = nodes.withColumn("label", col("node"))
     for (_ <- 0 until rounds) {
       labels = prop
@@ -297,7 +300,7 @@ object Graph {
         .groupBy(col("__dst"))
         .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__m"))
         .select(col("__dst").as("node"), (-col("__m.__nl")).as("label"))
-        .localCheckpoint(true)
+        .transform(Materialize.replacing(labels))
     }
     labels
   }
@@ -375,12 +378,12 @@ object Graph {
     val nodes = e.select(col("__src").as("node"))
       .union(e.select(col("__dst")))
       .distinct()
-    var settled = seeds.select(col(seedCol).cast("long").as("node"))
-      .filter(col("node").isNotNull)
-      .distinct()
-      .join(nodes, Seq("node"), "left_semi")
-      .withColumn("hops", lit(0L))
-      .localCheckpoint(true)
+    var (settled, nSettled) = Materialize.ckCount(
+      seeds.select(col(seedCol).cast("long").as("node"))
+        .filter(col("node").isNotNull)
+        .distinct()
+        .join(nodes, Seq("node"), "left_semi")
+        .withColumn("hops", lit(0L)))
     // driver finish: per hop one linear adjacency sweep
     if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges) {
       val spark = e.sparkSession
@@ -407,7 +410,7 @@ object Graph {
     }
     var frontier = settled
     var hop = 1
-    var drained = frontier.isEmpty
+    var drained = nSettled == 0
     while (hop <= maxHops && !drained) {
       // the frontier count rides the checkpoint job (r18): the old
       // isEmpty() was one more action per round of pure job floor
@@ -418,7 +421,11 @@ object Graph {
           .join(settled, Seq("node"), "left_anti")
           .withColumn("hops", lit(hop.toLong)))
       drained = nNext == 0
-      if (!drained) settled = settled.union(next).localCheckpoint(true)
+      if (!drained) {
+        val grown = settled.union(next).transform(Materialize(_))
+        Seq(settled, frontier).foreach(Materialize.free)
+        settled = grown
+      }
       frontier = next
       hop += 1
     }
@@ -465,12 +472,12 @@ object Graph {
     val nodes = e.select(col("__src").as("node"))
       .union(e.select(col("__dst")))
       .distinct()
-    var dist = seeds.select(col(seedCol).cast("long").as("node"))
-      .filter(col("node").isNotNull)
-      .distinct()
-      .join(nodes, Seq("node"), "left_semi")
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+    var (dist, nDist) = Materialize.ckCount(
+      seeds.select(col(seedCol).cast("long").as("node"))
+        .filter(col("node").isNotNull)
+        .distinct()
+        .join(nodes, Seq("node"), "left_semi")
+        .withColumn("dist", lit(0L)))
     // driver finish: synchronous Bellman-Ford rounds (dist_k reads
     // dist_{k-1}) — the exact ≤k-edge minima the frontier variant
     // provably computes; addExact mirrors the distributed side's ANSI
@@ -506,23 +513,25 @@ object Graph {
     }
     var frontier = dist
     var round = 1
-    var drained = frontier.isEmpty
+    var drained = nDist == 0
     while (round <= rounds && !drained) {
       val cand = e.join(frontier.withColumnRenamed("node", "__src"),
           Seq("__src"))
         .select(col("__dst").as("node"), (col("dist") + col("__w")).as("__nd"))
         .groupBy(col("node")).agg(min(col("__nd")).as("__nd"))
       val merged = dist.join(cand, Seq("node"), "full_outer")
-        .localCheckpoint(true) // read twice: next dist + next frontier
-      dist = merged.select(col("node"),
+        .transform(Materialize(_)) // read twice: next dist + next frontier
+      val nextDist = merged.select(col("node"),
           least(coalesce(col("dist"), col("__nd")),
             coalesce(col("__nd"), col("dist"))).as("dist"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       // frontier count rides the checkpoint job (r18)
       val (f, nF) = Materialize.ckCount(merged
         .filter(col("__nd").isNotNull &&
           (col("dist").isNull || col("__nd") < col("dist")))
         .select(col("node"), col("__nd").as("dist")))
+      Seq(merged, dist, frontier).foreach(Materialize.free)
+      dist = nextDist
       frontier = f
       drained = nF == 0
       round += 1
@@ -620,13 +629,12 @@ object Graph {
         (n, c, sumHops.get(n): Long, harmonic.get(n): Long)
       }.toDF("node", "n_reached", "sum_hops", "harmonic_fp")
     }
-    var settled = seedFrame
+    var (settled, nSettled) = Materialize.ckCount(seedFrame
       .select(col("__seed"), col("__seed").as("node"))
-      .withColumn("hops", lit(0L))
-      .localCheckpoint(true)
+      .withColumn("hops", lit(0L)))
     var frontier = settled
     var hop = 1
-    var drained = frontier.isEmpty
+    var drained = nSettled == 0
     while (hop <= maxHops && !drained) {
       // frontier count rides the checkpoint job (r18)
       val (next, nNext) = Materialize.ckCount(
@@ -637,7 +645,11 @@ object Graph {
           .join(settled, Seq("__seed", "node"), "left_anti")
           .withColumn("hops", lit(hop.toLong)))
       drained = nNext == 0
-      if (!drained) settled = settled.union(next).localCheckpoint(true)
+      if (!drained) {
+        val grown = settled.union(next).transform(Materialize(_))
+        Seq(settled, frontier).foreach(Materialize.free)
+        settled = grown
+      }
       frontier = next
       hop += 1
     }
@@ -715,14 +727,13 @@ object Graph {
 
     // forward: levels(d) = (seed, node, sigma) at distance exactly d
     val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var level = seedFrame
+    var (level, nLevel) = Materialize.ckCount(seedFrame
       .select(col("__seed"), col("__seed").as("node"),
-        expr("cast(1 as decimal(38,0))").as("__sigma"))
-      .localCheckpoint(true)
+        expr("cast(1 as decimal(38,0))").as("__sigma")))
     var settled = level
     levels += level
     var hop = 1
-    var drained = level.isEmpty
+    var drained = nLevel == 0
     while (hop <= maxHops && !drained) {
       // level count rides the checkpoint job (r18)
       val (next, nNext) = Materialize.ckCount(
@@ -735,7 +746,9 @@ object Graph {
       drained = nNext == 0
       if (!drained) {
         levels += next
-        settled = settled.unionByName(next).localCheckpoint(true)
+        val grown = settled.unionByName(next).transform(Materialize(_))
+        if (settled ne levels.head) Materialize.free(settled)
+        settled = grown
         level = next
       }
       hop += 1
@@ -761,7 +774,7 @@ object Graph {
         .join(contrib, Seq("__seed", "node"), "left")
         .select(col("__seed"), col("node"),
           coalesce(col("__acc"), zero).as("__delta"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       if (d > 0) perLevel += deltaD // seeds (d = 0) don't score
       deltaNext = deltaD
     }
@@ -960,8 +973,8 @@ object Graph {
         .union(live.select(col("v")))
         .groupBy(col("node")).agg(count(lit(1)).as("__d"))
       // Round fusion (r16): the survivor set is a small projection of
-      // the degree aggregate, but a checkpointed LogicalRDD carries NO
-      // size stats, so Catalyst plans BOTH semi-joins as full
+      // the degree aggregate, but Catalyst sizes it from the edge
+      // list, so it plans BOTH semi-joins as full
       // edge-list shuffles (AQE converts them at runtime, but the
       // map-side edge shuffle write still happens). When the survivor
       // set is broadcast-sized (bounded by 2·nLive), hint it and SKIP
@@ -987,7 +1000,7 @@ object Graph {
         } else {
           val alive = deg.filter(col("__d") >= k)
             .select(col("node"))
-            .localCheckpoint(true) // probed twice (u side + v side)
+            .transform(Materialize(_)) // probed twice (u side + v side)
           live
             .join(alive.withColumnRenamed("node", "u"), Seq("u"),
               "left_semi")
@@ -995,6 +1008,7 @@ object Graph {
               "left_semi")
         })
       fixed = nNext == nLive
+      Materialize.free(live)
       live = next
       nLive = nNext
       round += 1
@@ -1116,7 +1130,8 @@ object Graph {
         .join(hasIn, Seq("node"), "left_semi"))
       val trimmed = remaining.join(cyclic, Seq("node"), "left_anti")
         .select(col("node"), col("node").as("scc"))
-      assigned += trimmed.localCheckpoint(true)
+      assigned += trimmed.transform(Materialize(_))
+      Materialize.free(remaining)
       remaining = cyclic
       nRemaining = nCyclic
       if (nRemaining > 0) {
@@ -1125,10 +1140,10 @@ object Graph {
             Seq("src"), "left_semi")
           .join(remaining.withColumnRenamed("node", "dst"),
             Seq("dst"), "left_semi")
-          .localCheckpoint(true)
+          .transform(Materialize.replacing(live))
         // (2) forward max-id coloring to fixpoint
         var colr = remaining.select(col("node"), col("node").as("c"))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
         var changed = 1L
         innerLeft = nRemaining + 1L
         while (changed > 0) {
@@ -1141,10 +1156,11 @@ object Graph {
             .join(inc.withColumnRenamed("dst", "node"), Seq("node"), "left")
             .select(col("node"),
               greatest(col("c"), coalesce(col("__cin"), col("c"))).as("c"))
-            .localCheckpoint(true)
+            .transform(Materialize(_))
           changed = nxt
             .join(colr.select(col("node"), col("c").as("__c0")), Seq("node"))
             .filter(col("c") =!= col("__c0")).count()
+          Materialize.free(colr)
           colr = nxt
         }
         // (3) backward reach from each color root, within the color
@@ -1161,14 +1177,16 @@ object Graph {
           val (nxt, n2) = Materialize.ckCount(
             member.unionByName(cand).distinct())
           grew = n2 > nMember
+          Materialize.free(member)
           member = nxt
           nMember = n2
         }
         val sccMin = member.groupBy(col("c")).agg(min(col("node")).as("scc"))
         assigned += member.join(sccMin, Seq("c"))
-          .select(col("node"), col("scc")).localCheckpoint(true)
+          .select(col("node"), col("scc")).transform(Materialize(_))
         val (rem2, nRem2) = Materialize.ckCount(
           remaining.join(member, Seq("node"), "left_anti"))
+        Seq(colr, member, remaining).foreach(Materialize.free)
         remaining = rem2
         nRemaining = nRem2
         if (nRemaining > 0) {
@@ -1177,7 +1195,7 @@ object Graph {
               Seq("src"), "left_semi")
             .join(remaining.withColumnRenamed("node", "dst"),
               Seq("dst"), "left_semi")
-            .localCheckpoint(true)
+            .transform(Materialize.replacing(live))
         }
       }
     }
@@ -1272,7 +1290,7 @@ object Graph {
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  communities: DataFrame, nodeCol: String, labelCol: String,
                  scale: Long = 1000000L): DataFrame = {
-    val und = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    val und = undirected(edges, srcCol, dstCol).transform(Materialize(_))
     val lab = communities.select(col(nodeCol).cast("long").as("__n"),
       col(labelCol).cast("long").as("__l"))
     val counts = und
@@ -1330,12 +1348,12 @@ object Graph {
     require(minCommon >= 1, "minCommon must be >= 1")
     require(k > 0, "k must be positive")
     val und = undirected(edges, srcCol, dstCol)
-      .localCheckpoint(true) // adjacency + degrees + the anti-join
+      .transform(Materialize(_)) // adjacency + degrees + the anti-join
     val adj = und.select(col("u").as("a"), col("v").as("n"))
       .union(und.select(col("v"), col("u")))
     val deg = adj.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true) // apex cap + two degree attaches
+      .transform(Materialize(_)) // apex cap + two degree attaches
     val capped = adj.join(
         deg.filter(col("degree") <= maxApexDegree)
           .select(col("node").as("a")),
@@ -1372,7 +1390,7 @@ object Graph {
     * on the edge key — no windows, no driver data. */
   def edgeSupport(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val und = undirected(edges, srcCol, dstCol)
-      .localCheckpoint(true) // degrees, orientation, closure, final join
+      .transform(Materialize(_)) // degrees, orientation, closure, final join
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
@@ -1394,7 +1412,7 @@ object Graph {
       // comes back partition-blind and EnsureRequirements re-inserts
       // both exchanges anyway (measured: q131 plan identical, plus a
       // wasted construction shuffle). The two apex exchanges stay.
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val wedges = oriented
       .join(oriented.select(col("a"), col("b").as("c"), col("__bd").as("__cd")),
         Seq("a"))
@@ -1456,12 +1474,17 @@ object Graph {
         edgeSupport(live, "u", "v"),
         Seq(sum(when(col("support") < k - 2, 1L).otherwise(0L))
           .as("__nUnder")))
-      sup = supCk
       val nUnder = met("__nUnder")
       if (nUnder == null || nUnder.asInstanceOf[Long] == 0L) done = true
-      else live = sup.filter(col("support") >= k - 2)
-        .select(col("u"), col("v")).localCheckpoint(true)
+      else {
+        val next = supCk.filter(col("support") >= k - 2)
+          .select(col("u"), col("v")).transform(Materialize(_))
+        Seq(live, supCk).foreach(Materialize.free)
+        live = next
+      }
+      sup = supCk
     }
+    Materialize.free(live)
     sup
   }
 

@@ -456,13 +456,15 @@ object Hnsw {
     val fs = root.getFileSystem(hconf)
     recoverParked(fs, path)
     val (mC, efC) = (m, efConstruction)
-    val fresh = Ivf.assign(newDf, idCol, embCol, model)
-      .select(col(idCol).as("doc_id"),
-        Similarity.toDouble(col(embCol)).as("vec"), col("cluster_id"))
-      .localCheckpoint(true) // feeds the touched-set probe AND the merge
-    // the clusters this batch routes to — model.k-bounded driver list
-    val touched = fresh.select(col("cluster_id")).distinct()
-      .as[Int].collect().sorted
+    // the clusters this batch routes to (a model.k-bounded driver
+    // list) ride the checkpoint job that feeds the merge
+    val (fresh, met) = Materialize.ckObserve(
+      Ivf.assign(newDf, idCol, embCol, model)
+        .select(col(idCol).as("doc_id"),
+          Similarity.toDouble(col(embCol)).as("vec"), col("cluster_id")),
+      Seq(collect_set(col("cluster_id")).as("__touched")))
+    val touched = met("__touched").asInstanceOf[scala.collection.Seq[Int]]
+      .toArray.sorted
     if (touched.isEmpty) return
     val old = spark.read.parquet(path)
       .filter(col("cluster_id").isin(touched.map(Int.box): _*)) // pruned

@@ -205,7 +205,7 @@ object ImageHash {
       "banded pairing is exact only for maxHamming <= 3")
     val sigs = hashed.filter(col(hashCol).isNotNull)
       .select(col(idCol), col(hashCol).as("__ph"))
-      .localCheckpoint(true) // both sides of the band join
+      .transform(Materialize(_)) // both sides of the band join
     val banded = sigs.select(col(idCol), col("__ph"),
       posexplode(array((0 until 4).map(bi =>
         shiftright(col("__ph"), bi * 16).bitwiseAND(0xFFFFL)): _*)))

@@ -74,16 +74,11 @@ object Interlace {
 
     // Each input feeds two consumers (the breakpoint union and its
     // payload join). Inputs that are themselves expensive (joins,
-    // aggregates, windows — e.g. truncateOne outputs) are persisted so
-    // the subtree runs once; bare scan/filter/project chains are NOT
-    // (re-scanning beats materializing a cache copy, and the scan keeps
-    // its pushed filters). Self-join attribute dedup blocks
-    // ReuseExchange here, so the persist is the only sharing mechanism.
-    // Deliberately a persist, NOT a localCheckpoint like the dedup/ANN
-    // operators: a checkpointed LogicalRDD drops the size estimate that
-    // lets Catalyst broadcast the small stratification side, while the
-    // InMemoryRelation keeps it. The lifetime is bounded by the store
-    // build that consumes the interlaced frame.
+    // aggregates, windows — e.g. truncateOne outputs) are materialized
+    // so the subtree runs once; bare scan/filter/project chains are NOT
+    // (re-scanning beats materializing a copy, and the scan keeps its
+    // pushed filters). Self-join attribute dedup blocks ReuseExchange
+    // here, so materializing is the only sharing mechanism.
     def isExpensive(df: DataFrame): Boolean =
       df.queryExecution.optimizedPlan.collectFirst {
         case p: org.apache.spark.sql.catalyst.plans.logical.Join => p
@@ -91,10 +86,7 @@ object Interlace {
         case p: org.apache.spark.sql.catalyst.plans.logical.Window => p
         case p: org.apache.spark.sql.catalyst.plans.logical.Generate => p
       }.isDefined
-    val tables = tables0.map(t =>
-      if (isExpensive(t))
-        t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else t)
+    val tables = tables0.map(t => if (isExpensive(t)) Materialize(t) else t)
 
     val keyCols = keys.map(col)
     // Union of breakpoints per key (open ends contribute no breakpoint).

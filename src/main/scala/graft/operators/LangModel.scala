@@ -75,11 +75,9 @@ object LangModel {
     val totalTokens = if (total.isNullAt(0)) 0L else total.getLong(0)
     // deterministic prune: count desc, then word, so reruns and both
     // engines agree on the boundary
-    val uni = uniAll.orderBy(col("c_uni").desc, col("w"))
-      .limit(topUnigrams)
-      // eager narrow result; released by ContextCleaner (never cache)
-      .localCheckpoint(true)
-    val vocabSize = uni.count()
+    // narrow result; the vocab size rides the checkpoint job
+    val (uni, vocabSize) = Materialize.ckCount(
+      uniAll.orderBy(col("c_uni").desc, col("w")).limit(topUnigrams))
 
     val bi = df.select(explode(bigramsOf(col(textCol))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
@@ -89,7 +87,7 @@ object LangModel {
       .join(broadcast(uni.select(col("w").as("w2"))), Seq("w2"), "left_semi")
       .orderBy(col("c_bi").desc, col("w1"), col("w2"))
       .limit(topBigrams)
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     BigramLm(uni, bi, totalTokens, vocabSize)
   }
 
@@ -237,7 +235,7 @@ object LangModel {
       .withColumn("__k", when(col("n_scored") > 0,
         expr("cast(surprisal_fp as decimal(38,0)) * 1000 div n_scored"))
         .otherwise(lit(-1L)))
-      .localCheckpoint(true) // scored twice below; never re-derive
+      .transform(Materialize(_)) // scored twice below; never re-derive
     val cutVals = Selection.valueAtRanks(
         scored.withColumn("__one", lit(1)), "__one", "__k",
         cuts.map(c => s"c$c" -> s"greatest(1L, (__n * ${c}L) div 100L)"))
@@ -277,7 +275,7 @@ object LangModel {
       .withColumn("__k", when(col("n_scored") > 0,
         expr("cast(surprisal_fp as decimal(38,0)) * 1000 div n_scored"))
         .otherwise(lit(-1L)))
-      .localCheckpoint(true) // scored twice below; never re-derive
+      .transform(Materialize(_)) // scored twice below; never re-derive
     val cutVals = Selection.valueAtRanks(
         scored.withColumn("__one", lit(1)), "__one", "__k",
         cuts.map(c => s"c$c" -> s"greatest(1L, (__n * ${c}L) div 100L)"))
@@ -309,7 +307,7 @@ object LangModel {
       .withColumn("__k", when(col("n_scored") > 0,
         expr("cast(surprisal_fp as decimal(38,0)) * 1000 div n_scored"))
         .otherwise(lit(-1L)))
-      .localCheckpoint(true) // cut scan + final compare share one result
+      .transform(Materialize(_)) // cut scan + final compare share one result
     val labels = cuts.map(c => s"c$c")
     val cutRows = Selection.valueAtRanks(
       scored.filter(col("n_scored") > 0), groupCol, "__k",
@@ -354,7 +352,7 @@ object LangModel {
       .withColumn("__k", when(col("n_scored") > 0,
         expr("cast(surprisal_fp as decimal(38,0)) * 1000 div n_scored"))
         .otherwise(lit(-1L)))
-      .localCheckpoint(true) // cut scan + final compare share one result
+      .transform(Materialize(_)) // cut scan + final compare share one result
     val labels = cuts.map(c => s"c$c")
     val cutRows = Selection.valueAtRanks(
       scored.filter(col("n_scored") > 0), groupCol, "__k",
@@ -463,21 +461,21 @@ object LangModel {
     val toks = base
       .select(col("__t"), explode(TextAnalysis.words(col("__text"))).as("w"))
       .filter(col("w") =!= "")
-    val uniAll = toks.groupBy(col("w")).agg(
-      count(lit(1)).as("c_all"),
-      sum(when(col("__t"), 1L).otherwise(0L)).as("c_tgt"))
-      .localCheckpoint(true) // two prunes read one aggregation
-    val totals = uniAll.agg(
-      coalesce(sum(col("c_all")), lit(0L)),
-      coalesce(sum(col("c_tgt")), lit(0L))).head
-    def pruneUni(cCol: String) = uniAll
+    // two prunes read one aggregation; totals and vocab sizes ride
+    // the checkpoint jobs
+    val (uniAll, totals) = Materialize.ckObserve(
+      toks.groupBy(col("w")).agg(
+        count(lit(1)).as("c_all"),
+        sum(when(col("__t"), 1L).otherwise(0L)).as("c_tgt")),
+      Seq(coalesce(sum(col("c_all")), lit(0L)).as("all"),
+        coalesce(sum(col("c_tgt")), lit(0L)).as("tgt")))
+    def pruneUni(cCol: String) = Materialize.ckCount(uniAll
       .filter(col(cCol) > 0)
       .select(col("w"), col(cCol).as("c_uni"))
       .orderBy(col("c_uni").desc, col("w"))
-      .limit(topUnigrams)
-      .localCheckpoint(true)
-    val uniCorpus = pruneUni("c_all")
-    val uniTarget = pruneUni("c_tgt")
+      .limit(topUnigrams))
+    val (uniCorpus, nCorpus) = pruneUni("c_all")
+    val (uniTarget, nTarget) = pruneUni("c_tgt")
 
     val biAll = base
       .select(col("__t"), explode(bigramsOf(col("__text"))).as("b"))
@@ -486,7 +484,7 @@ object LangModel {
       .groupBy(col("w1"), col("w2")).agg(
         count(lit(1)).as("c_all"),
         sum(when(col("__t"), 1L).otherwise(0L)).as("c_tgt"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     def pruneBi(uni: DataFrame, cCol: String) = biAll
       .filter(col(cCol) > 0)
       .select(col("w1"), col("w2"), col(cCol).as("c_bi"))
@@ -494,12 +492,12 @@ object LangModel {
       .join(broadcast(uni.select(col("w").as("w2"))), Seq("w2"), "left_semi")
       .orderBy(col("c_bi").desc, col("w1"), col("w2"))
       .limit(topBigrams)
-      .localCheckpoint(true)
+      .transform(Materialize(_))
 
     (BigramLm(uniTarget, pruneBi(uniTarget, "c_tgt"),
-       totals.getLong(1), uniTarget.count()),
+       totals("tgt").asInstanceOf[Long], nTarget),
      BigramLm(uniCorpus, pruneBi(uniCorpus, "c_all"),
-       totals.getLong(0), uniCorpus.count()))
+       totals("all").asInstanceOf[Long], nCorpus))
   }
 
   /** ENGINE-EXACT twin of [[importanceSelect]]: both LMs' surprisals
@@ -560,7 +558,7 @@ object LangModel {
       .withColumn("weight_fp", when(col("n_scored") > 0,
         expr("(cast(__cfp as decimal(38,0)) - __tfp) * 1000 div n_scored")))
       .select(col(idCol), col("n_scored"), col("weight_fp"))
-      .localCheckpoint(true) // cut resolve + filter reuse one result
+      .transform(Materialize(_)) // cut resolve + filter reuse one result
     val scorable = scored.filter(col("n_scored") > 0)
     val cutRows = Selection.valueAtRanks(
       scorable.withColumn("__one", lit(1))

@@ -57,7 +57,7 @@ object Linkage {
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
       .filter(col("dist") <= maxDist)
       .select(col("id_a"), col("id_b"), col("dist"))
-      .localCheckpoint(true) // two argmin consumers
+      .transform(Materialize(_)) // two argmin consumers
     val bestA = cand.groupBy(col("id_a"))
       .agg(min(struct(col("dist"), col("id_b"))).as("__m"))
       .select(col("id_a"), col("__m.dist").as("dist"),

@@ -5,30 +5,41 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Eager localCheckpoint variants that deliver aggregate metrics from
-  * the SAME materialization job via a named CollectMetrics node (r18,
-  * guide §1.2/§2.4): the graph family's prep and round loops all
-  * followed `localCheckpoint(true)` with a separate `count()` /
-  * `isEmpty()` action — one extra job-scheduling floor per call and
-  * per ROUND, which dominates small and residue-sized inputs, plus (in
-  * the r17 prep shape) a whole second materialization of the edge set
-  * above the driver-finish bound just to read its count first.
-  * CollectMetrics is exactly-once per successful query — task retries
-  * don't double-count — so the observed values equal what the separate
-  * action would have returned.
+/** The one materialization policy in graft: every intermediate that is
+  * read more than once is pinned by an EAGER `localCheckpoint` made
+  * here and nowhere else (MaterializeLintSpec enforces it). A
+  * checkpoint truncates lineage and is no CacheManager entry, so a later
+  * query with the same plan is never served a stale copy; its blocks go
+  * with the ContextCleaner once the frame is dropped, or earlier through
+  * [[free]]; and the checkpointed LogicalRDD keeps the source plan's
+  * size estimate, so broadcast planning downstream is unchanged.
   *
-  * Deliberately the STRING-named `observe` + `queryExecution.
-  * observedMetrics`, NOT `org.apache.spark.sql.Observation`: the
-  * Observation variant registers with the session's ObservationManager
-  * — a non-serializable, lazily-initialized SparkSession field — and
-  * once initialized it breaks ANY later task closure that drags the
-  * session through Java serialization (Spark ML models with training
-  * summaries do; MlSpec caught exactly that). The named variant only
-  * plants the plan node; metrics are read back from the executed
-  * QueryExecution after the checkpoint action, synchronously. */
+  * The `ck*` variants deliver aggregate metrics from the SAME job via a
+  * named CollectMetrics node, replacing the `count()`/`isEmpty()` action
+  * that used to follow a checkpoint (one job-scheduling floor per call
+  * and per loop round). CollectMetrics is exactly-once per successful
+  * query — task retries don't double-count. Deliberately the
+  * STRING-named `observe` + `queryExecution.observedMetrics`, NOT
+  * `org.apache.spark.sql.Observation`: that variant registers with the
+  * session's non-serializable, lazily-initialized ObservationManager,
+  * which then breaks any later task closure that drags the session
+  * through Java serialization (Spark ML models with training summaries
+  * do; MlSpec caught exactly that). */
 private[graft] object Materialize {
 
   private val seq = new AtomicLong()
+
+  /** Eager localCheckpoint; chained call sites use
+    * `.transform(Materialize(_))`. */
+  def apply(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** One loop generation: materialize the successor, then free `old`
+    * (`x = f(x).transform(Materialize.replacing(x))`). */
+  def replacing(old: DataFrame)(df: DataFrame): DataFrame = {
+    val next = apply(df)
+    free(old)
+    next
+  }
 
   /** Plant metrics, checkpoint eagerly, read the metrics row back from
     * the query execution the checkpoint action ran. */
@@ -37,7 +48,7 @@ private[graft] object Materialize {
     val name = s"__graft_ck_${seq.incrementAndGet()}"
     val observed = df.observe(name, metrics.head, metrics.tail: _*)
     val toRun = key.fold(observed)(observed.repartition(_))
-    val ckd = toRun.localCheckpoint(true)
+    val ckd = apply(toRun)
     (ckd, toRun.queryExecution.observedMetrics(name))
   }
 
@@ -47,14 +58,9 @@ private[graft] object Materialize {
     (ckd, row.getLong(0))
   }
 
-  /** The graph-prep shape, single-materialization (r17 verdict item
-    * 3): dedup/projection → `repartition(key)` → localCheckpoint, with
-    * the driver-finish bound count observed on the way in — ONE edge
-    * materialization on every branch (r17 checkpointed the narrow
-    * frame, counted it, then checkpointed the repartitioned frame
-    * again: above the bound the edge set was written and read twice).
-    * Below the bound the repartition exchange runs over a bound-capped
-    * row count — cheaper than the separate count job it replaces. */
+  /** The graph-prep shape: dedup/projection → `repartition(key)` →
+    * checkpoint, with the driver-finish bound count observed on the way
+    * in — ONE edge materialization on every branch. */
   def ckRepartitionCount(df: DataFrame, key: Column): (DataFrame, Long) = {
     val (ckd, row) = ck(df, Seq(count(lit(1)).as("__n")), Some(key))
     (ckd, row.getLong(0))
@@ -76,13 +82,11 @@ private[graft] object Materialize {
     (ckd, row.schema.fieldNames.zip(row.toSeq).toMap)
   }
 
-  /** Release a localCheckpoint's persisted blocks NOW. Dataset-level
-    * unpersist() is a NO-OP for checkpoint RDDs (they are not tracked
-    * by the CacheManager — r17 ADVICE), so superseded generations in
-    * the round loops used to sit in executor storage until the
-    * ContextCleaner GC'd them; reach the underlying RDD through the
-    * checkpoint's LogicalRDD leaf instead. Best-effort: any other plan
-    * shape is left to GC. */
+  /** Release a checkpoint's blocks NOW, through its LogicalRDD leaf
+    * (Dataset.unpersist() is a no-op for checkpoints: the CacheManager
+    * does not track them). Best-effort: any other plan shape is left to
+    * GC. Free only what no live lazy frame still reads: freed
+    * checkpoint blocks are not recomputed. */
   def free(df: DataFrame): Unit = df.queryExecution.logical match {
     case lr: org.apache.spark.sql.execution.LogicalRDD =>
       lr.rdd.unpersist(false)

@@ -126,14 +126,12 @@ object PageRank {
       col("__src"))
     if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges)
       return iterateDriver(e, None, None, iters, dampBp, scale)
-    val nodes = e.select(col("__src").as("node"))
+    val (nodes, n) = Materialize.ckCount(e.select(col("__src").as("node"))
       .union(e.select(col("__dst")))
-      .distinct()
-      .localCheckpoint(true)
-    val n = nodes.count()
+      .distinct())
     require(n > 0, "empty edge set")
     val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val base = scale * (10000L - dampBp) / 10000L / n
     var ranks = nodes.withColumn("rank", lit(scale / n))
     for (_ <- 0 until iters) {
@@ -146,7 +144,7 @@ object PageRank {
       ranks = nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + coalesce(col("__s"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
+        .transform(Materialize.replacing(ranks))
     }
     ranks
   }
@@ -174,21 +172,19 @@ object PageRank {
       col("__src"))
     if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges)
       return iterateDriver(e, Some(ranks), None, iters, dampBp, scale)
-    val nodes = e.select(col("__src").as("node"))
+    val (nodes, n) = Materialize.ckCount(e.select(col("__src").as("node"))
       .union(e.select(col("__dst")))
-      .distinct()
-      .localCheckpoint(true)
-    val n = nodes.count()
+      .distinct())
     require(n > 0, "empty edge set")
     val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val base = scale * (10000L - dampBp) / 10000L / n
     // nodes new since the published ranks start at the uniform share
     var r = nodes.join(
         ranks.select(col("node"), col("rank")), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("rank"), lit(scale / n)).as("rank"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     for (_ <- 0 until iters) {
       val contribs = e
         .join(r.withColumnRenamed("node", "__src"), Seq("__src"))
@@ -199,7 +195,7 @@ object PageRank {
       r = nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + coalesce(col("__s"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
+        .transform(Materialize.replacing(r))
     }
     r
   }
@@ -247,15 +243,13 @@ object PageRank {
     if (driverFinishMaxEdges > 0 &&
         met("__n").asInstanceOf[Long] <= driverFinishMaxEdges)
       return iterateDriver(e, None, None, iters, dampBp, scale)
-    val nodes = e.select(col("__src").as("node"))
+    val (nodes, n) = Materialize.ckCount(e.select(col("__src").as("node"))
       .union(e.select(col("__dst")))
-      .distinct()
-      .localCheckpoint(true)
-    val n = nodes.count()
+      .distinct())
     // NOTE: __W would collide with __w under case-insensitive
     // resolution — keep the name fully distinct
     val outw = e.groupBy(col("__src")).agg(sum(col("__w")).as("__wsum"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val base = scale * (10000L - dampBp) / 10000L / n
     var ranks = nodes.withColumn("rank", lit(scale / n))
     for (_ <- 0 until iters) {
@@ -269,7 +263,7 @@ object PageRank {
       ranks = nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + coalesce(col("__s"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
+        .transform(Materialize.replacing(ranks))
     }
     ranks
   }
@@ -311,23 +305,23 @@ object PageRank {
     val nodes = e.select(col("__src").as("node"))
       .union(e.select(col("__dst")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // seed markers ride the node frame for the whole loop: one flag
     // column instead of a per-round join against the seed table
-    val seeded = nodes.join(
+    val (seeded, seedMet) = Materialize.ckObserve(nodes.join(
         seeds.select(col(seedCol).cast("long").as("node")).distinct()
           .withColumn("__seed", lit(1L)),
         Seq("node"), "left")
-      .select(col("node"), coalesce(col("__seed"), lit(0L)).as("__seed"))
-      .localCheckpoint(true)
+      .select(col("node"), coalesce(col("__seed"), lit(0L)).as("__seed")),
+      Seq(coalesce(sum(col("__seed")), lit(0L)).as("__ns")))
     // the driver finish collects the EDGES and the node-sized flag
     // frame — never the raw seed table (it can be huge; the flags are
     // bounded by the node count)
     if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges)
       return iterateDriver(e, None, Some(seeded), iters, dampBp, scale)
     val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
-      .localCheckpoint(true)
-    val ns = seeded.agg(sum(col("__seed"))).head.getLong(0)
+      .transform(Materialize(_))
+    val ns = seedMet("__ns").asInstanceOf[Long]
     require(ns > 0, "no seed id appears in the edge set")
     val base = scale * (10000L - dampBp) / 10000L / ns
     var ranks = seeded.select(col("node"),
@@ -343,7 +337,7 @@ object PageRank {
         .select(col("node"),
           (col("__seed") * lit(base) +
             coalesce(col("__s"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
+        .transform(Materialize.replacing(ranks))
     }
     ranks
   }

@@ -84,7 +84,7 @@ object Pq {
     require(m > 0 && ksub > 0, "m and ksub must be positive")
     val v = df.select(col(idCol).as("__id"),
       Similarity.toDouble(col(embCol)).as("__e"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize(_))
     try {
       val seedIds = v.groupBy(
           pmod(xxhash64(col("__id")), lit(ksub)).as("__b"))
@@ -118,7 +118,7 @@ object Pq {
         it += 1
       }
       Model(books)
-    } finally v.unpersist()
+    } finally Materialize.free(v)
   }
 
   /** Append `pq_codes: array<int>` (length m, each in [0, ksub)). */
@@ -325,7 +325,7 @@ object Pq {
     require(opqIters >= 1, "opqIters must be positive")
     val v = df.select(col(idCol).as("__id"),
         Similarity.toDouble(col(embCol)).as("__x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize(_))
     try {
       val dim = v.select(size(col("__x"))).head.getInt(0)
       require(dim % m == 0, s"embedding dim $dim not divisible by m=$m")
@@ -392,7 +392,7 @@ object Pq {
         t += 1
       }
       OpqModel(r, pq)
-    } finally v.unpersist()
+    } finally Materialize.free(v)
   }
 
   /** Exhaustive OPQ top-k: rotate once in the scan, then the plain ADC

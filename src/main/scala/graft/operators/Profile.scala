@@ -138,7 +138,7 @@ object Profile {
           .as("n_empty"))
       .withColumn("avg_tokens_c",
         expr("n_tokens * 100L div greatest(n_docs, 1L)"))
-      .localCheckpoint(true) // five stack rows + the dup left join
+      .transform(Materialize(_)) // five stack rows + the dup left join
     val longBase = base.select(col(sourceCol), expr(
       """stack(5,
         |  'n_docs', n_docs, 'n_tokens', n_tokens,
@@ -319,17 +319,15 @@ object Profile {
   def heavyHitters(df: DataFrame, keyCol: String, topN: Int): DataFrame = {
     require(topN > 0, "topN must be positive")
     import org.apache.spark.sql.expressions.Window
-    // checkpointed: the total and the top-N both read the aggregated
-    // key counts — without it the base table is scanned twice (the
-    // total is just the sum of the counts, never a second pass over
-    // df). A localCheckpoint, not a cache, so the count blocks don't
-    // outlive the call as a session-lifetime InMemoryRelation.
-    val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    // checkpointed: the top-N reads the aggregated key counts, and the
+    // total (their sum) rides the checkpoint job — never a second pass
+    // over df
+    val (counts, met) = Materialize.ckObserve(
+      df.groupBy(col(keyCol)).agg(count(lit(1)).as("n")),
+      Seq(coalesce(sum(col("n")), lit(0L)).as("total")))
     // max(1): an empty input yields no output rows, but the share
     // expressions must still be well-formed literals
-    val total = math.max(
-      counts.agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0), 1L)
+    val total = math.max(met("total").asInstanceOf[Long], 1L)
     // orderBy + limit compiles to TakeOrderedAndProject (per-partition
     // top-N, merged) — the full key-count table is never globally
     // sorted; only the topN survivors see the single-partition window
@@ -418,7 +416,7 @@ object Profile {
           .cast("long").as("recency"),
         count(lit(1)).as("frequency"),
         sum(col(centsCol)).as("monetary"))
-      .localCheckpoint(true) // 3 rank resolutions + final bucket pass
+      .transform(Materialize(_)) // 3 rank resolutions + final bucket pass
     val targets = (1 until buckets).map(i =>
       s"c$i" -> s"greatest(1L, (__n * ${i}L) div ${buckets}L)")
     // all three axes resolve in ONE valueAtRanks pass over a tagged
@@ -1072,7 +1070,7 @@ object Profile {
         df.select(col(groupCol), col(xCol), col(yCol)), groupCol, xCol)
       .withColumn("__px", expr("(10000 * rank) div n"))
       .select(col(groupCol), col(yCol), col("__px"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val rxy = Selection.rankRows(rx, groupCol, yCol)
       .withColumn("__py", expr("(10000 * rank) div n"))
       .drop("rank", "n")
@@ -1109,7 +1107,7 @@ object Profile {
     val ranked = ranked0
       .withColumn("pct_bp", expr(s"($scale * rank) div n"))
       .drop("rank", "n")
-      .localCheckpoint(true) // rankRows lineage is multi-scan; pin it
+      .transform(Materialize(_)) // rankRows lineage is multi-scan; pin it
     // Inverse CDF via tie-collapsed global anchors. FAST PATH (the
     // [[Selection.valueAtRanks]] driver-histogram posture): when the
     // distinct-value bound min(span+1, n) fits the driver budget, the

@@ -265,7 +265,7 @@ object Rolling {
                 revenueCents: Column, scale: Long = 10000L): DataFrame = {
     val firsts = df.groupBy(col(userCol))
       .agg(min(date_trunc("week", col(tsCol))).as("__cw"))
-      .localCheckpoint(true) // consumed by cohort sizes AND the re-join
+      .transform(Materialize(_)) // consumed by cohort sizes AND the re-join
     val sizes = firsts.groupBy(col("__cw")).agg(count(lit(1)).as("users"))
     val wc = Window.partitionBy(col("__cw")).orderBy(col("week_offset"))
     df.select(col(userCol), date_trunc("week", col(tsCol)).as("__ew"),
@@ -304,7 +304,7 @@ object Rolling {
     val daily = df
       .groupBy(col(groupCol), to_date(col(tsCol)).as("__d"))
       .agg(count(lit(1)).as("__x"))
-      .localCheckpoint(true) // re-joined once per lag
+      .transform(Materialize(_)) // re-joined once per lag
     val pairs = lags.map { l =>
       daily.join(daily.select(col(groupCol),
           date_add(col("__d"), l).as("__d"), col("__x").as("__y")),
@@ -328,7 +328,7 @@ object Rolling {
     val daily = df
       .groupBy(col(groupCol), to_date(col(tsCol)).as("__d"))
       .agg(count(lit(1)).as("__x"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val joined = daily
       .select(col(groupCol).as("series_a"), col("__d"),
         col("__x").as("__xa"))
@@ -358,7 +358,7 @@ object Rolling {
                        tsCol: String): DataFrame = {
     val uw = df.select(col(userCol).as("__u"),
         date_trunc("week", col(tsCol)).as("__w")).distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val first = uw.groupBy(col("__u")).agg(min(col("__w")).as("__fw"))
     val shifted = uw.select(col("__u"),
       (col("__w") + expr("INTERVAL 7 DAYS")).as("__w"))
@@ -418,7 +418,7 @@ object Rolling {
     val daily = df
       .groupBy(col(groupCol), to_date(col(tsCol)).as("date"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // shared: tally, U series, single-day arm
+      .transform(Materialize(_)) // shared: tally, U series, single-day arm
     val tal = Eval.boundedTally(
       daily.groupBy(col(groupCol), col("n").as("__v"))
         .agg(count(lit(1)).as("__c")),

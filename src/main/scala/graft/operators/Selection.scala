@@ -678,7 +678,7 @@ object Selection {
           s"topKPerGroup: NULL $valueCol has no rank; filter or " +
             "coalesce NULLs upstream")).cast("long"))
           .otherwise(-col(valueCol).cast("long")))
-      .localCheckpoint(true) // cut resolve + above/tie filters share it
+      .transform(Materialize(_)) // cut resolve + above/tie filters share it
     val cuts = valueAtRanks(tagged, groupCol, "__negv",
       Seq("cut" -> s"least(${k.toLong}L, __n)"))
       .collect().map(r => r.get(0) -> (r.getLong(2), r.getLong(3)))

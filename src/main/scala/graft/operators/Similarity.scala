@@ -148,16 +148,14 @@ object Similarity {
     val sig = df.select(col(idCol), toDouble(col(embCol)).as("__e"),
       lshSignature(col(embCol), dim, nBits).as("__sig"))
     // `banded` feeds both the query side and the candidate side, and
-    // the signature fold is the dominant per-row cost. localCheckpoint
-    // (not cache) so the blocks are released when the result is dropped
-    // instead of pinning an InMemoryRelation for the session lifetime.
+    // the signature fold is the dominant per-row cost.
     val banded = sig.select(col(idCol), col("__e"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         bi => concat_ws("", transform(
           slice(col("__sig"), bi * lit(rowsPerBand) + 1, lit(rowsPerBand)),
           _.cast("string"))))))
       .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bucket")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val queries = banded.join(
       df.filter(queryPred).select(col(idCol)), Seq(idCol), "left_semi")
       .select(col(idCol).as("query_id"), col("__e").as("__qe"),
@@ -272,14 +270,14 @@ object Similarity {
     */
   def semanticDedup(df: DataFrame, idCol: String, embCol: String,
                     model: Ivf.Model, threshold: Double): DataFrame = {
-    // persisted: the pair join's two legs and the final verdict join
+    // materialized: the pair join's two legs and the final verdict join
     // all read it, and Catalyst won't CSE the branches — without this
     // the corpus is scanned and centroid-assigned three times
     val assigned = Ivf.assign(df, idCol, embCol, model)
       .select(col(idCol), col("cluster_id"),
         toDouble(col(embCol)).as("__e"))
       .withColumn("__n", norm(col("__e")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize(_))
     // rename every column on the low-id leg: both legs derive from the
     // same plan, and distinct names keep the equi-join out of Spark's
     // dataset-id self-join disambiguation (same hazard as the funnel)
@@ -295,15 +293,14 @@ object Similarity {
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_dups_below"))
     // the output is NARROW (id, cluster, flag, count): materialize it
-    // eagerly so the fat (embedding, norm) cache can be released here
-    // instead of leaking for the session lifetime
+    // so the fat (embedding, norm) checkpoint can be released here
     val out = assigned.select(col(idCol), col("cluster_id"))
       .join(dups, Seq(idCol), "left")
       .select(col(idCol), col("cluster_id"),
         col("n_dups_below").isNull.as("keep"),
         coalesce(col("n_dups_below"), lit(0L)).as("n_dups_below"))
-      .localCheckpoint(true)
-    assigned.unpersist()
+      .transform(Materialize(_))
+    Materialize.free(assigned)
     out
   }
 }

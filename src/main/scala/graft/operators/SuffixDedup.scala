@@ -237,15 +237,16 @@ object SuffixDedup {
     val spark = df.sparkSession
     import spark.implicits._
 
-    val toks = df.select(col(idCol).cast("long").as("doc"),
-        split(trim(col(textCol)), "\\s+").as("ta"))
-      .filter(col("ta").isNotNull)
-      .localCheckpoint(true) // positions now + LCP token slices later
-    val statsRow = toks.agg(
-      coalesce(max(size(col("ta"))), lit(0)).as("m"),
-      coalesce(sum(size(col("ta")).cast("long")), lit(0L)).as("n")).head
-    val maxDl = statsRow.getInt(0)
-    val nPos = statsRow.getLong(1)
+    // positions now + LCP token slices later; the size stats ride the
+    // checkpoint job
+    val (toks, stats) = Materialize.ckObserve(
+      df.select(col(idCol).cast("long").as("doc"),
+          split(trim(col(textCol)), "\\s+").as("ta"))
+        .filter(col("ta").isNotNull),
+      Seq(coalesce(max(size(col("ta"))), lit(0)).as("m"),
+        coalesce(sum(size(col("ta")).cast("long")), lit(0L)).as("n")))
+    val maxDl = stats("m").asInstanceOf[Int]
+    val nPos = stats("n").asInstanceOf[Long]
     val empty = Seq.empty[(Long, Int, Long, Int, Long)]
       .toDF("doc_a", "pos_a", "doc_b", "pos_b", "lcp")
     if (nPos < 2) return empty
@@ -288,7 +289,7 @@ object SuffixDedup {
         val sortedVcDf = positions.groupBy(col("tok"))
           .agg(count(lit(1)).as("c"))
           .orderBy(col("tok"))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
         val sortedVc = sortedVcDf.rdd
           .map(r => (r.getString(0), r.getLong(1)))
         val partTotals = sortedVc
@@ -301,7 +302,7 @@ object SuffixDedup {
             var run = partOffsets(i)
             it.map { case (t, c) => val p = run; run += c; (t, p, c) }
           }.toDF("tok", "pr", "c")
-          .localCheckpoint(true)
+          .transform(Materialize(_))
       }
     // FULL DRIVER SA (r17): below the driver-finish position bound the
     // level-0 driver finish fires on the loop's FIRST iteration anyway
@@ -376,7 +377,7 @@ object SuffixDedup {
 
     var prTab = positions.join(vocabPr, Seq("tok"))
       .select(col("doc"), col("pos"), col("pr"), col("c"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // tied count rides the checkpoint job (r18 — one fewer action)
     var (tied, tiedCount) = Materialize.ckCount(
       prTab.filter(col("c") >= 2)
@@ -398,7 +399,7 @@ object SuffixDedup {
       // and failing them just continues the distributed loop
       if (tiedCount <= driverFinishMaxPos) {
         val affected = tied.select(col("doc")).distinct()
-          .localCheckpoint(true)
+          .transform(Materialize(_))
         val budget = prTab
           .join(broadcast(affected), Seq("doc"), "left_semi").count()
         if (budget <= driverFinishMaxTok) {
@@ -465,14 +466,14 @@ object SuffixDedup {
                else updR.unionByName(ovl.join(
                  updR.select(col("doc"), col("pos")),
                  Seq("doc", "pos"), "left_anti")))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
       } else {
         // overlay the refined ranks onto the full table
         prTab = prTab.join(upd.select(col("doc"), col("pos"), col("npr")),
             Seq("doc", "pos"), "left")
           .select(col("doc"), col("pos"),
             coalesce(col("npr"), col("pr")).as("pr"))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
       }
       tiedCount =
         if (met("__t") == null) 0L else met("__t").asInstanceOf[Long]
@@ -524,7 +525,7 @@ object SuffixDedup {
             .select(col("doc"), col("pos")),
           Seq("doc", "pos"), "left_semi")
         if (sys.env.contains("SPARK_GRAFT_SA_DEBUG")) {
-          val k = kept.localCheckpoint(true)
+          val k = kept.transform(Materialize(_))
           System.err.println(s"SA block filter kept=${k.count()} " +
             s"of $nPos positions t=${System.nanoTime() / 1e9}")
           k
@@ -545,7 +546,7 @@ object SuffixDedup {
     val saSorted = saBase
       .orderBy(col("pr"), col("doc"), col("pos"))
       .select(col("doc"), col("pos"))
-      .localCheckpoint(true) // boundary probe + the pair scan
+      .transform(Materialize(_)) // boundary probe + the pair scan
     val partEnds = saSorted.rdd.mapPartitionsWithIndex { (i, it) =>
       if (!it.hasNext) Iterator.empty
       else {
@@ -727,7 +728,7 @@ object SuffixDedup {
       .unionByName(batch.select(col(idCol), col(textCol)))
     val spans = duplicatedSpans(scoped, idCol, textCol, minLen, maxLcp)
     val bIds = batch.select(col(idCol).cast("long").as("__bid"))
-      .distinct().localCheckpoint(true) // feeds both endpoint probes
+      .distinct().transform(Materialize(_)) // feeds both endpoint probes
     spans
       .join(bIds.select(col("__bid").as("doc_a"), lit(1).as("__ba")),
         Seq("doc_a"), "left")
@@ -802,7 +803,7 @@ object SuffixDedup {
     df.select(col(idCol).cast("long").as(docName),
         split(trim(col(textCol)), "\\s+").as(arrName))
       .filter(col(arrName).isNotNull)
-      .localCheckpoint(true) // gram scan + pair re-attach (+ rebuild)
+      .transform(Materialize(_)) // gram scan + pair re-attach (+ rebuild)
 
   /** Shared candidate stage of [[decontaminateExact]] and
     * [[contaminationReport]]: gram-anchored (train position, bench

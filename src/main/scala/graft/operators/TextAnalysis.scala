@@ -164,9 +164,9 @@ object TextAnalysis {
         conv(substring(md5(col("__shingle")), 1, 8), 16, 10)
           .cast("long").as("__g"))
       .distinct()
-      .localCheckpoint(true) // feeds the split-gram set + doc probe
+      .transform(Materialize(_)) // feeds the split-gram set + doc probe
     val sp = sh.select(col("__s"), col("__g")).distinct()
-      .localCheckpoint(true) // self-join + doc probe
+      .transform(Materialize(_)) // self-join + doc probe
     val shared = sp.select(col("__s").as("split_a"), col("__g"))
       .join(sp.select(col("__s").as("split_b"), col("__g").as("__g2")),
         col("__g") === col("__g2"))

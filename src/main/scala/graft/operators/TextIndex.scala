@@ -30,9 +30,7 @@ object TextIndex {
     * the probe side read it (Catalyst would otherwise prune the two
     * branches into different subtrees and scan + explode the corpus
     * twice) — postings are (8B, 8B, 8B) rows, spillable, and an index
-    * build materializes them anyway. A checkpoint, not a cache: the
-    * blocks die with the result's reference instead of outliving the
-    * call as a session-lifetime InMemoryRelation.
+    * build materializes them anyway.
     */
   /** `broadcastVocab`: the pruned vocabulary is small at moderate scale
     * and broadcasting it keeps the postings un-reshuffled — but Heaps'
@@ -48,7 +46,7 @@ object TextIndex {
         explode(terms(col(textCol))).as("term"))
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val vocab = tf.groupBy("term")
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
@@ -79,7 +77,7 @@ object TextIndex {
         explode(terms(col(textCol))).as("term"))
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val dfTbl = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val wd = Window.partitionBy(col("doc_id"))
       .orderBy(col("tf").desc, col("df"), col("term"))
@@ -112,7 +110,7 @@ object TextIndex {
     val toks = df.select(col(idCol).as("doc_id"),
         posexplode(terms(col(textCol))).as(Seq("pos", "term")))
       .filter(col("term").isin(phrase.distinct: _*))
-      .localCheckpoint(true) // probed once per phrase token
+      .transform(Materialize(_)) // probed once per phrase token
     var cur = toks.filter(col("term") === phrase.head)
       .select(col("doc_id"), col("pos").as("__p0"))
     for (i <- 1 until phrase.size)
@@ -197,7 +195,7 @@ object TextIndex {
         explode(col("__terms")).as("term"))
     val tf = docTerms.groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true) // probed by the df agg AND the score join
+      .transform(Materialize(_)) // probed by the df agg AND the score join
 
     // null-text docs (dl = −1 under size()) carry no terms and score
     // nowhere; exclude them from the corpus constants too
@@ -303,13 +301,13 @@ object TextIndex {
         explode(col("__terms")).as("term"))
     val tf = docTerms.groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true) // both retrieval passes + the feedback join
+      .transform(Materialize(_)) // both retrieval passes + the feedback join
     val stats = df.select(col(idCol), size(terms(col(textCol))).as("dl"))
       .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl")).head
     val nDocs = stats.getLong(0)
     val avgdl = if (stats.isNullAt(1)) 1.0 else stats.getDouble(1)
     val dfTbl = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
 
     val qTerms1 = queries.toDF("query_id", "__qtext")
       .select(col("query_id"),
@@ -387,7 +385,7 @@ object TextIndex {
         explode(col("__terms")).as("term"))
     val tf = docTerms.groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true) // both passes + the feedback join probe it
+      .transform(Materialize(_)) // both passes + the feedback join probe it
     val stats = df.select(size(terms(col(textCol))).cast("long").as("dl"))
       .filter(col("dl") >= 0)
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("t"),
@@ -397,7 +395,7 @@ object TextIndex {
     val tTok = stats.getLong(1)
     val maxDl = stats.getLong(2)
     val dfTbl = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     def idfOf(d: Long): Long = graft.functions.PortableLn.lnFp(
       BigInt(2) * (nDocs + 1), BigInt(2) * d + 1)
     def dfOf(termSet: Seq[String]): Map[String, Long] =

@@ -80,7 +80,7 @@ object VideoHash {
     val sigs = hashed
       .filter(col("fhashes").isNotNull && size(col("fhashes")) > 0)
       .select(col(idCol), col("fhashes").as("__fhs"))
-      .localCheckpoint(true) // both band sides + both verify sides
+      .transform(Materialize(_)) // both band sides + both verify sides
     val banded = sigs
       .select(col(idCol), posexplode(col("__fhs"))
         .as(Seq("__fidx", "__fh")))
@@ -147,7 +147,7 @@ object VideoHash {
     val sigs = hashed
       .filter(col(hashesCol).isNotNull && size(col(hashesCol)) > 0)
       .select(col(idCol), col(hashesCol).as("__fhs"))
-      .localCheckpoint(true) // both band sides + both verify sides
+      .transform(Materialize(_)) // both band sides + both verify sides
     val banded = sigs
       .select(col(idCol), explode(col("__fhs")).as("__fh"))
       .select(col(idCol),

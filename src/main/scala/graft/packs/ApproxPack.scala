@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.core.Tables
-import graft.operators.{Dedup, Ivf, Multimodal, Pq, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Ivf, Materialize, Multimodal, Pq, Similarity,
+  TextAnalysis}
 
 /** Approximate / hash-based operators. Deliberately NO oracle SQL: the
   * algorithms are not reasonably SQL-expressible, so the driver records
@@ -57,7 +58,7 @@ object ApproxPack extends QueryPack {
     // recall guarantee; HnswSpec pins recall ≥ 0.9, determinism, and
     // the routing bound). SF-INVARIANT panel: vec_id % 100 = 0, ≤ 2000
     "q270_hnsw_topk" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings").localCheckpoint(true)
+      val emb = Tables.load(s, dir, "embeddings").transform(Materialize(_))
       val model = graft.operators.Ivf.train(
         emb, "vec_id", "embedding", k = 16, iters = 2)
       graft.operators.Hnsw.topK(emb, "vec_id", "embedding",
@@ -121,7 +122,7 @@ object ApproxPack extends QueryPack {
       // Codebooks train on a deterministic 1/4 hash-sample — at corpus
       // scale a quantizer is always fit on a sample, and the k-means
       // passes are the dominant cost of this query
-      val emb = Tables.load(s, dir, "embeddings").localCheckpoint(true)
+      val emb = Tables.load(s, dir, "embeddings").transform(Materialize(_))
       val sample = emb.filter(pmod(xxhash64(col("vec_id")), lit(4)) === 0)
       val pq = Pq.train(sample, "vec_id", "embedding", m = 8, ksub = 16,
         iters = 2)
@@ -135,7 +136,7 @@ object ApproxPack extends QueryPack {
     // concentrated than raw vectors → tighter error for the same
     // budget); score = ⟨q,centroid⟩ offset + residual ADC lookups
     "q94_ivf_pq_residual" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings").localCheckpoint(true)
+      val emb = Tables.load(s, dir, "embeddings").transform(Materialize(_))
       val sample = emb.filter(pmod(xxhash64(col("vec_id")), lit(4)) === 0)
       val coarse = Ivf.train(sample, "vec_id", "embedding", k = 16,
         iters = 2)
@@ -151,7 +152,7 @@ object ApproxPack extends QueryPack {
     // scores → rows-only; PqSpec proves the rotation stays orthonormal
     // and recall >= plain PQ on subspace-straddling data
     "q99_opq_topk" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings").localCheckpoint(true)
+      val emb = Tables.load(s, dir, "embeddings").transform(Materialize(_))
       val sample = emb.filter(pmod(xxhash64(col("vec_id")), lit(8)) === 0)
       val opq = Pq.trainOpq(sample, "vec_id", "embedding",
         m = 8, ksub = 16, iters = 2, opqIters = 2)
@@ -165,7 +166,7 @@ object ApproxPack extends QueryPack {
     // brute-force within-cluster scan and measures recall vs the
     // global pair set
     "q87_semantic_dedup" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings").localCheckpoint(true)
+      val emb = Tables.load(s, dir, "embeddings").transform(Materialize(_))
       val model = Ivf.train(emb, "vec_id", "embedding", k = 16, iters = 2)
       Similarity.semanticDedup(emb, "vec_id", "embedding", model,
         threshold = 0.9)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.core.Tables
-import graft.operators.{AsOf, Eval, Funnels, Multimodal, Profile,
-  Survival}
+import graft.operators.{AsOf, Eval, Funnels, Materialize, Multimodal,
+  Profile, Survival}
 
 /** Causal / experimentation inference + real-media decode (round-10
   * additions): Shapley attribution, Aalen–Johansen competing risks,
@@ -281,9 +281,9 @@ object InferencePack extends QueryPack {
       // recompute v1 ~16x inside v3 (the store's real path
       // materializes to parquet between transactions)
       val v1 = graft.core.Scd2.updateSnapshot(None,
-        snap("1994-01-01"), Cdc1, cols).localCheckpoint(true)
+        snap("1994-01-01"), Cdc1, cols).transform(Materialize(_))
       val v2 = graft.core.Scd2.updateSnapshot(Some(v1),
-        snap("1995-01-01"), Cdc2, cols).localCheckpoint(true)
+        snap("1995-01-01"), Cdc2, cols).transform(Materialize(_))
       val v3 = graft.core.Scd2.updateSnapshot(Some(v2),
         snap("1996-01-01"), Cdc3, cols)
       graft.core.Scd2.changesBetween(v3, Cdc1, Cdc3)
@@ -389,7 +389,7 @@ object InferencePack extends QueryPack {
     // the output is exactly the cross-side slice of q279's full
     // banded join; the oracle brute-forces that slice
     "q295_image_probe" -> ((s, dir) => {
-      val hashed = imageHashed(s, dir).localCheckpoint(true)
+      val hashed = imageHashed(s, dir).transform(Materialize(_))
       graft.operators.BandProbe.probePairs(
           hashed.filter(col("doc_id") % 2 === 0),
           hashed.filter(col("doc_id") % 2 === 1),

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.core.Tables
-import graft.operators.{Chunking, Dedup, Markup, Similarity, Splits, TextAnalysis}
+import graft.operators.{Chunking, Dedup, Markup, Materialize, Similarity,
+  Splits, TextAnalysis}
 
 /** LLM-training-data pipeline operators over the documents/embeddings
   * tables: dedup, similarity search, text analysis. */
@@ -190,16 +191,14 @@ object LlmPack extends QueryPack {
       // checkpointed: the LSH-signature branch and the anti-join/
       // packing branch both read it, and the excision subtree
       // (corpus-wide gram shuffle + run window + reconstruction) is
-      // the dominant cost — without this it executes twice. A
-      // localCheckpoint, not a cache, so the cleaned corpus doesn't
-      // outlive the query in the session's CacheManager.
+      // the dominant cost — without this it executes twice.
       val cleaned = Dedup.exciseSpans(docs, "doc_id", "text",
           n = 5, minRun = 4)
         .join(docs.select("doc_id", "lang"), "doc_id")
         .filter(col("n_words") - col("n_removed") >= 10)
         .select(col("doc_id"), col("lang"),
           col("clean_text").as("text"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       val dupIds = Dedup.minhashLshPortable(cleaned, "doc_id", "text",
           n = 3, numPerms = 8, bands = 4, minMatch = 6)
         .select(col("id_b").as("doc_id")).distinct()

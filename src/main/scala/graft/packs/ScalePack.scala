@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.{Queries, QueryPack}
 import graft.core.{Intervals, Tables}
 import graft.operators.{BloomJoin, ConnectedComponents, Layout, Linkage,
-  Profile, Quantize, Splits, TextIndex, TrainingSet}
+  Materialize, Profile, Quantize, Splits, TextIndex, TrainingSet}
 
 /** Scale-posture operators: bucketized interval-overlap join, bloom-
   * pruned join, weighted corpus mixing, profiling histograms, int8
@@ -200,7 +200,7 @@ object ScalePack extends QueryPack {
           Seq("doc"))
         .select(col("doc").as("doc_id"), col("lang"),
           col("clean_text").as("text"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       val dupIds = graft.operators.Dedup.minhashLshPortable(cleaned,
           "doc_id", "text", n = 3, numPerms = 8, bands = 4,
           minMatch = 6)

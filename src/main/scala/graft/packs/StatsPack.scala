@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.core.Tables
-import graft.operators.{Eval, Funnels, Graph, Linkage, Profile, Rolling,
-  Survival, TextAnalysis}
+import graft.operators.{Eval, Funnels, Graph, Linkage, Materialize, Profile,
+  Rolling, Survival, TextAnalysis}
 
 /** Exact-integer statistics & evaluation: ROC-AUC, Kaplan–Meier
   * survival, central moments, k-anonymity, conversion attribution,
@@ -179,7 +179,7 @@ object StatsPack extends QueryPack {
         .join(li.withColumnRenamed("pk", "v"), Seq("ok"))
         .filter(col("u") < col("v"))
         .select(col("u"), col("v")).distinct()
-      val und = Graph.undirected(pairs, "u", "v").localCheckpoint(true)
+      val und = Graph.undirected(pairs, "u", "v").transform(Materialize(_))
       val deg = und.select(col("u").as("node"))
         .unionByName(und.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -217,7 +217,7 @@ object StatsPack extends QueryPack {
         // robustOutliers' two Selection passes + two deviation joins
         // each re-read the input; pin the (day-bounded) residual rows
         // once instead of re-deriving them from raw events per pass
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       Profile.robustOutliers(res, "event_type", "residual_fp",
           threshBp = 35000)
         .select(col("event_type"), col("date").cast("string").as("d"),
@@ -341,7 +341,7 @@ object StatsPack extends QueryPack {
         .select(col("u"), col("v"))
         // consumed by BOTH the LPA loop and modularity's edge/degree
         // rollups — pin the expensive co-occurrence derivation once
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       val comm = Graph.labelPropagation(pairs, "u", "v", rounds = 5)
       Graph.modularity(pairs, "u", "v", comm, "node", "label")
     }),

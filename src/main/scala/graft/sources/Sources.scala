@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.Materialize
+
 /** Source ingestion helpers (the reference pulls CSVs from remote buckets
   * via source_conn helpers — R/source_conn_helpers.R; here sources are
   * local/cluster paths in any Spark-supported format).
@@ -39,12 +41,10 @@ object Sources {
   /** Split a PERMISSIVE read into (clean, quarantined) — quarantined
     * rows keep only the raw record for replay after the producer fix.
     * Spark requires the corrupt-record frame to be materialized before
-    * filtering on the corrupt column alone; the caller decides where
-    * (here: a persist, released by the caller via unpersist on either
-    * half's `sparkSession` catalog, or just let it age out). */
+    * filtering on the corrupt column alone: both halves read one
+    * checkpoint, released once both are dropped. */
   def quarantine(df: DataFrame): (DataFrame, DataFrame) = {
-    val cached = df.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = Materialize(df)
     (cached.filter(col("_corrupt_record").isNull)
         .drop("_corrupt_record"),
       cached.filter(col("_corrupt_record").isNotNull)

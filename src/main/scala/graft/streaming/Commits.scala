@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
+import graft.operators.Materialize
+
 /** The idempotent-append half of every exactly-once foreachBatch
   * commit in this package, in ONE place: append `rows` to the parquet
   * table at `path`, keeping only rows whose `keyCol` is not already
@@ -42,7 +44,7 @@ object Commits {
       else rows.join(
         spark.read.parquet(path).select(keyCols.head, keyCols.tail: _*),
         keyCols, "left_anti")
-    ).localCheckpoint(true)
+    ).transform(Materialize(_))
     if (!fresh.isEmpty) fresh.write.mode("append").parquet(path)
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Splits, TextAnalysis}
+import graft.operators.{Dedup, Materialize, Splits, TextAnalysis}
 
 /** Streaming twin of the batch curation pipeline (the q98 chain):
   * quality gate → corpus-history LSH dedup → weighted acceptance →
@@ -91,10 +91,10 @@ object CurationStream {
     val prepared = batch
       .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
         col("text"))
-    val gated = (if (scrub) scrubbed(prepared) else prepared)
-      .filter(size(TextAnalysis.words(col("text"))) >= minWords)
-      .localCheckpoint(true)
-    if (gated.isEmpty) return
+    val (gated, nGated) = Materialize.ckCount(
+      (if (scrub) scrubbed(prepared) else prepared)
+        .filter(size(TextAnalysis.words(col("text"))) >= minWords))
+    if (nGated == 0) return
 
     val index = readIfExists(spark, indexPath, indexSchema)
     // every doc seen so far (kept or dropped) vetoes higher ids

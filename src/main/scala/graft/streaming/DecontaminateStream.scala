@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.operators.SuffixDedup
+import graft.operators.{Materialize, SuffixDedup}
 
 /** Streaming EXACT-substring decontamination — the continuous twin of
   * [[SuffixDedup.decontaminateExact]] (q275) in the SaProbeStream
@@ -69,11 +69,11 @@ object DecontaminateStream {
                  protectedPath: String, rangesPath: String,
                  minLen: Int, maxLcp: Int = 512): Unit = {
     val spark = batch.sparkSession
-    val prepared = batch
+    // feeds the ranging AND the corpus append
+    val (prepared, n) = Materialize.ckCount(batch
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .filter(col("text").isNotNull)
-      .localCheckpoint(true) // feeds the ranging AND the corpus append
-    if (prepared.isEmpty) return
+      .filter(col("text").isNotNull))
+    if (n == 0) return
     // Serialized against commitProtected on the ranges table: without
     // the lock, a doc batch that reads the protected set BEFORE a
     // concurrent protected batch lands, while that protected batch
@@ -107,11 +107,11 @@ object DecontaminateStream {
                       protectedPath: String, rangesPath: String,
                       minLen: Int, maxLcp: Int = 512): Unit = {
     val spark = batch.sparkSession
-    val prepared = batch
+    // feeds the ranging AND the append
+    val (prepared, n) = Materialize.ckCount(batch
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .filter(col("text").isNotNull)
-      .localCheckpoint(true) // feeds the ranging AND the append
-    if (prepared.isEmpty) return
+      .filter(col("text").isNotNull))
+    if (n == 0) return
     // same lock as commitDocs — see the write-skew note there
     graft.core.KeyedLocks.withLock(s"__decon#$rangesPath") {
       val corpus = readIfExists(spark, corpusPath)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Ivf
+import graft.operators.{Ivf, Materialize}
 
 /** Streaming maintenance of an IVF ANN index: the production shape
   * where the coarse quantizer is trained OFFLINE (rarely — [[Ivf.train]]
@@ -34,14 +34,14 @@ object IvfStream {
   def commitBatch(batch: DataFrame, model: Ivf.Model,
                   postingsPath: String): Unit = {
     // eager checkpoint: the assignment kernel must run once, not once
-    // per downstream action (isEmpty probe + anti-join + write)
-    val assigned = Ivf.assign(
+    // per downstream action (anti-join + write); the emptiness probe
+    // rides the checkpoint job
+    val (assigned, n) = Materialize.ckCount(Ivf.assign(
         batch.select(col("vec_id").cast("long").as("vec_id"),
           col("embedding")),
         "vec_id", "embedding", model)
-      .select("vec_id", "embedding", "cluster_id")
-      .localCheckpoint(true)
-    if (assigned.isEmpty) return
+      .select("vec_id", "embedding", "cluster_id"))
+    if (n == 0) return
     Commits.appendIfAbsent(assigned, postingsPath, "vec_id")
   }
 

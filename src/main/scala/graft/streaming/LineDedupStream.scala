@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** Streaming twin of [[Dedup.dedupLines]] (CCNet-style boilerplate
   * removal) with PREFIX-EXACT semantics: each micro-batch is cleaned
@@ -50,13 +50,12 @@ object LineDedupStream {
     val fs = outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val delivered = batch
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val docs = (
+    val (docs, n) = Materialize.ckCount(
       if (!fs.exists(outP)) delivered
       else delivered.join(
         spark.read.parquet(outPath).select("doc_id"),
         Seq("doc_id"), "left_anti"))
-      .localCheckpoint(true)
-    if (docs.isEmpty) return
+    if (n == 0) return
 
     val replayed = fs.exists(new org.apache.hadoop.fs.Path(indexPath)) &&
       !spark.read.parquet(indexPath)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 
-import graft.operators.BandProbe
+import graft.operators.{BandProbe, Materialize}
 
 /** Streaming incremental near-dup PROBE for the signature modalities
   * (image dhash, audio fingerprint — any scalar 64-bit hash column):
@@ -56,7 +56,7 @@ object MultimodalProbeStream {
     val spark = batch.sparkSession
     val rows = batch.select(col(idCol), col(hashCol))
       .filter(col(hashCol).isNotNull)
-      .localCheckpoint(true) // probed AND enrolled
+      .transform(Materialize(_)) // probed AND enrolled
     val p = new org.apache.hadoop.fs.Path(indexPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.SuffixDedup
+import graft.operators.{Materialize, SuffixDedup}
 
 /** Streaming twin of the INCREMENTAL ExactSubstr probe
   * ([[SuffixDedup.probeSpans]]): each arriving micro-batch of documents
@@ -60,11 +60,11 @@ object SaProbeStream {
                   rangesPath: String, minLen: Int,
                   maxLcp: Int = 512): Unit = {
     val spark = batch.sparkSession
-    val prepared = batch
+    // feeds the probe, both sinks, the guard
+    val (prepared, n) = Materialize.ckCount(batch
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .filter(col("text").isNotNull)
-      .localCheckpoint(true) // feeds the probe, both sinks, the guard
-    if (prepared.isEmpty) return
+      .filter(col("text").isNotNull))
+    if (n == 0) return
     // replay guard: a crash between the corpus append and the
     // checkpoint commit re-delivers this batch with its rows already
     // (partially) in the corpus — never probe a doc against itself

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.Scd2
 import graft.core.Scd2.{Checksum, FromTs, UntilTs}
+import graft.operators.Materialize
 
 /** Streaming SCD2 maintenance — the continuous twin of
   * [[graft.core.Scd2.updateSnapshot]]: each micro-batch is a complete
@@ -73,7 +74,7 @@ object Scd2Stream {
         lit("").as(UntilTs)).limit(0)
     // pin the open set: both anti-joins below must see ONE listing
     val open = opens.join(closes.select(VK), Seq(VK), "left_anti")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val toClose = open
       .join(incO.select(Checksum, "__occ"), Seq(Checksum, "__occ"),
         "left_anti")

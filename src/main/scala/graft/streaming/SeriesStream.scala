@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Intervals, KeyedLocks}
+import graft.operators.Materialize
 
 /** Incrementally-maintained prevalence/incidence series under
   * continuous ingest — the streaming twin of `KeyJoinFeatures` for the
@@ -183,7 +184,7 @@ class SeriesStream(
     // tiny frame eagerly and cuts the file lineage.
     val delta = KeyedLocks.withLock(s"series#$statePath") {
       recover()
-      spark.read.parquet(deltaPath).localCheckpoint()
+      spark.read.parquet(deltaPath).transform(Materialize(_))
     }
     val sc = stratCols.map(col)
     val dates = spark.range(1).select(

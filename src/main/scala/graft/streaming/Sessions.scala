@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Event-time operators shared by batch and streaming paths. */
 object Windows {
 
@@ -65,7 +67,7 @@ object Sessions {
           .as("__last"))
       .select(col("__first.t").as("__ft"), col("__last.t").as("__lt"),
         col("__n"))
-      .localCheckpoint(true) // three conditional rollups read it
+      .transform(Materialize(_)) // three conditional rollups read it
     val entries = per.groupBy(col("__ft").as("event_type"))
       .agg(count(lit(1)).as("n_entries"),
         sum(when(col("__n") === 1, 1L).otherwise(0L)).as("n_bounces"))
@@ -175,7 +177,7 @@ object Paths {
       .filter(col("__u").isNotNull && col("__t").isNotNull &&
         col("__et").isNotNull)
       .repartition(col("__u"))
-      .localCheckpoint(true) // probed by every ladder rung
+      .transform(Materialize(_)) // probed by every ladder rung
     val nTypes = e.agg(count_distinct(col("__et"))).first().getLong(0)
     require(nTypes <= maxTypes,
       s"event-type alphabet $nTypes exceeds the $maxTypes ladder " +

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 
-import graft.operators.Markup
+import graft.operators.{Markup, Materialize}
 import graft.sources.Warc
 
 /** Streaming twin of the WARC front door — continuous web-corpus
@@ -61,7 +61,7 @@ object WarcIngestStream {
                   linkWordRatio: Int = 4): Unit = {
     val recs = Warc.recordsFromBlobs(
       batch.select(col("src"), col("content")), "content")
-      .localCheckpoint(true) // feeds pages AND quarantine
+      .transform(Materialize(_)) // feeds pages AND quarantine
     // a parseable response with no WARC-Record-ID has no pages key:
     // it quarantines on (src, rec_idx) — the 'reported, never
     // dropped' contract; letting a null key reach the pages join

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Isolated scale benchmark for the r17 connected-components DRIVER
   * FINISH (union-find with min-id roots) vs the distributed
   * large/small-star loop — the measurement behind
@@ -47,7 +49,7 @@ object CcScaleBench {
           pmod(expr("id div 2") + 1L, lit(nNodes)) + 1L)
           .otherwise(pmod(xxhash64(lit(2L), col("id")), lit(nNodes)) + 1L)
           .as("b"))
-      .localCheckpoint(true) // materialize BEFORE the timed region
+      .transform(Materialize(_)) // materialize BEFORE the timed region
 
     val bound = mode match {
       case "off" => 0L

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Isolated scale benchmark for the kCore ROUND FUSION (r16:
   * broadcast-hinted survivor semi-joins skipping the per-round
   * checkpoint job) — the measurement the shipped datasets cannot
@@ -57,7 +59,7 @@ object KcoreScaleBench {
     val edges = spark.range(nEdges)
       .select(endp(1L).as("src"), endp(2L).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .localCheckpoint(true) // materialize BEFORE the timed region
+      .transform(Materialize(_)) // materialize BEFORE the timed region
 
     val bcastBound = mode match {
       case "off" => 0L

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.SuffixDedup
+import graft.operators.{Materialize, SuffixDedup}
 
 /** Dev tool: formatted physical plans for the FORCED-DISTRIBUTED
   * branches that the declared queries driver-finish past at gate
@@ -54,7 +54,7 @@ object PlanDump {
         val edges = spark.range(2500000L).select(
             pmod(xxhash64(lit(3L), col("id")), lit(500000L)).as("s"),
             pmod(xxhash64(lit(4L), col("id")), lit(500000L)).as("d"))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
         val sc = spark.sparkContext
         val jobCounter = new java.util.concurrent.atomic.AtomicInteger
         sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -82,9 +82,9 @@ object PlanDump {
         probe("prep_r17_shape") {
           val e0 = edges.select(col("s").cast("long").as("__src"),
               col("d").cast("long").as("__dst"))
-            .localCheckpoint(true)
+            .transform(Materialize(_))
           e0.count()
-          val e = e0.repartition(col("__src")).localCheckpoint(true)
+          val e = e0.repartition(col("__src")).transform(Materialize(_))
           e0.unpersist()
           e.count()
         }

@@ -75,14 +75,6 @@ object PlanLint {
     // a frame is bounded when every leaf it can reach is a literal /
     // Range, sits under an Aggregate (count rows, not fact rows), or
     // under a Limit — those stay model/domain-sized at any input scale.
-    // An InMemoryRelation (the deliberate persist-for-broadcast seam)
-    // is bounded iff the plan it CACHES tops out in an aggregate.
-    def physHasAgg(p: SparkPlan): Boolean = p match {
-      case _: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
-        true
-      case a: AdaptiveSparkPlanExec => physHasAgg(a.executedPlan)
-      case other => other.children.exists(physHasAgg)
-    }
     def boundedFrame(p: LogicalPlan): Boolean = p match {
       case _: Aggregate => true
       case _: LocalRelation => true
@@ -90,8 +82,6 @@ object PlanLint {
       case _: OneRowRelation => true
       case _: GlobalLimit => true
       case _: LocalLimit => true
-      case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        physHasAgg(imr.cachedPlan)
       case _: LeafNode => false
       case other => other.children.forall(boundedFrame)
     }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.SuffixDedup
+import graft.operators.{Materialize, SuffixDedup}
 
 /** Isolated scale benchmark for the ExactSubstr block pre-filter and
   * large-mode doubling (SuffixDedup.duplicatedSpans) — the measurement
@@ -64,7 +64,7 @@ object SaScaleBench {
         array_join(when(col("doc_id") % passEvery === 0,
           concat(col("ta"), passage)).otherwise(col("ta")), " ")
           .as("text"))
-      .localCheckpoint(true) // materialize BEFORE the timed region
+      .transform(Materialize(_)) // materialize BEFORE the timed region
     val nPos = corpus.select(
       sum(size(split(col("text"), "\\s+")))).head.getLong(0)
 

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Profile, Similarity, TextIndex}
+import graft.core.{Aggregators, Intervals, KeyJoinFeatures}
+import graft.operators.{Dedup, Interlace, Pq, Profile, Similarity, TextIndex}
 
 /** Long-lived-session hygiene: no operator may leave a `cache()`/
   * `persist()` entry behind after its result is consumed. In the shared
@@ -81,6 +82,25 @@ class CacheLifecycleSpec extends SparkSpec {
     assertNoCacheLeak("lshTopK") {
       Similarity.lshTopK(vecs, "vec_id", "embedding",
         $"vec_id" % 10 === 0, k = 3, dim = 8).count()
+    }
+  }
+
+  test("store read path and OPQ training leave no cache behind") {
+    val dir = "/root/testdata/sf0.001"
+    val (start, end) = ("1995-01-01", "1995-03-31")
+    def obs = Intervals.slice(Queries.orderIntervals(spark, dir), start, end)
+    def seg = Intervals.slice(Queries.segmentFeature(spark, dir), start, end)
+    // two stratifications: the interlace step sees joined inputs
+    def strats = Seq(seg, seg.withColumnRenamed("mktsegment", "seg2"))
+    assertNoCacheLeak("keyJoinFeatures") {
+      KeyJoinFeatures(obs, "n_orders", "key_cust", Aggregators.Count,
+        strats, Seq("mktsegment", "seg2"), start, end).count()
+    }
+    assertNoCacheLeak("truncateInterlace") {
+      Interlace.truncateInterlace(obs, strats).count()
+    }
+    assertNoCacheLeak("trainOpq") {
+      Pq.trainOpq(vecs, "vec_id", "embedding", m = 2, ksub = 4).dim.toLong
     }
   }
 }

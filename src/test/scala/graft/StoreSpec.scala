@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.core.StoreCatalog
+import graft.core.{Aggregators, FeatureHandler, FeatureStore, StoreCatalog}
 import graft.stores.TpchFeatureStore
 
 class StoreSpec extends SparkSpec {
@@ -444,5 +444,88 @@ class StoreSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       store.keyJoinFeatures("mktsegment", Seq.empty, "1995-01-01", "1995-01-31")
     }
+  }
+
+  test("a series re-issued after purgeKeys equals a cache-free recompute") {
+    val sf = "/root/testdata/sf0.01"
+    val path = Files.createTempDirectory("graft-store-reissue").toString
+    val store = TpchFeatureStore(spark, sf, path)
+    def series() = store
+      .keyJoinFeatures("n_orders", Seq("mktsegment"), "1995-01-01",
+        "1995-03-31")
+      .collect().map(_.toString).sorted.toSeq
+    val served = series()
+    val keys = spark.read.parquet(s"$path/order_episodes")
+      .select("key_cust").distinct().orderBy("key_cust").limit(400)
+      .as[Long].collect()
+    assert(keys.length == 400)
+    assert(store.purgeKeys("order_episodes", "key_cust",
+      keys.toSeq.toDF("key_cust")) > 0)
+    val reissued = series()
+    spark.catalog.clearCache()
+    val recomputed = series()
+    assert(recomputed != served, "the purge must change the series")
+    assert(reissued == recomputed)
+  }
+
+  test("a loader named like the coverage log is rejected at construction") {
+    val handler = FeatureHandler(
+      (_, _, _) => spark.range(0).toDF(), Aggregators.Count, "")
+    val err = intercept[IllegalArgumentException] {
+      new FeatureStore(spark, sfDir,
+        Files.createTempDirectory("graft-store-reserved").toString,
+        dsMap = Seq("n_x" -> "logs"), loaders = Map("logs" -> handler))
+    }
+    assert(err.getMessage.contains("reserved"))
+  }
+
+  test("coverage-log appends and the backup's log copy wait on one lock") {
+    // another process holding a lock shows as its marker file beside the
+    // table; for each name the log could be locked under, the append and
+    // the backup must both wait or both go ahead
+    spark.conf.set("graft.TpchOrders.lock_wait_max_ms", "200")
+    spark.conf.set("graft.TpchOrders.lock_wait_increment_ms", "10")
+    try {
+      val path = Files.createTempDirectory("graft-store-loglock").toString
+      val store = TpchFeatureStore(spark, sfDir, path)
+      store.getFeature("n_orders", "1995-01-01", "1995-01-31")
+      def waits(op: => Any): Boolean =
+        try { op; false }
+        catch {
+          case e: IllegalStateException
+            if e.getMessage.contains("Lock not released") => true
+        }
+      val outcomes = Seq("logs", "__logs").zipWithIndex.map {
+        case (name, i) =>
+          val marker = new java.io.File(s"$path/$name.lock")
+          assert(marker.createNewFile())
+          try {
+            val month = f"1996-${i + 1}%02d"
+            val append = waits(store.getFeature("n_orders",
+              s"$month-01", s"$month-28"))
+            val backup = waits(store.backupTo(
+              Files.createTempDirectory("graft-store-loglock-bk").toString))
+            name -> (append, backup)
+          } finally marker.delete()
+      }
+      assert(outcomes.forall { case (_, (a, b)) => a == b },
+        s"append and backup disagree on the log lock: $outcomes")
+      assert(outcomes.exists(_._2 == (true, true)),
+        s"no marker held the log: $outcomes")
+    } finally {
+      spark.conf.unset("graft.TpchOrders.lock_wait_max_ms")
+      spark.conf.unset("graft.TpchOrders.lock_wait_increment_ms")
+    }
+  }
+
+  test("age intervals: one multi-year compute equals the per-year union") {
+    def ages(start: String, end: String) =
+      TpchFeatureStore.ageGroupFeature(spark, sfDir, start, end)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val perYear = (1992 to 1996)
+      .map(y => ages(s"$y-01-01", s"$y-12-31"))
+      .reduce(_ unionByName _).distinct()
+    assert(rows(ages("1992-01-01", "1996-12-31")) == rows(perYear))
   }
 }
